@@ -1,6 +1,12 @@
-"""Scalar/array function helpers: text analysis, similarity, hashing."""
+"""Scalar/array function helpers: text analysis, similarity, hashing.
 
-from columnar_analytics_engine_spark.functions.hashing import h60, sql_h60
-from columnar_analytics_engine_spark.functions.text import tokens, distinct_tokens
+Cross-engine kernels are defined once in :mod:`.kernels` and rendered
+to Spark SQL or DuckDB SQL; ``h60``/``tokens``/... are their Spark
+Column wrappers.
+"""
 
-__all__ = ["h60", "sql_h60", "tokens", "distinct_tokens"]
+from columnar_analytics_engine_spark.functions.hashing import h60
+from columnar_analytics_engine_spark.functions.kernels import quote_ident, render
+from columnar_analytics_engine_spark.functions.text import distinct_tokens, tokens
+
+__all__ = ["h60", "render", "quote_ident", "tokens", "distinct_tokens"]

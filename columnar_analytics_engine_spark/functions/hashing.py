@@ -1,17 +1,12 @@
-"""Cross-engine deterministic hashing.
+"""Cross-engine deterministic hashing (Spark side).
 
 MinHash/SimHash need a keyed hash that is (a) deterministic, (b) cheap,
 and (c) reproducible in the DuckDB oracle.  Spark's native ``xxhash64``
-has no DuckDB twin, so we derive a 60-bit integer from md5 — md5 is
-identical everywhere, and 15 hex chars (60 bits) fit a signed int64.
-
-    Spark :  conv(substr(md5(concat(prefix, x)), 1, 15), 16, 10) :: long
-    DuckDB:  CAST('0x' || substr(md5(prefix || x), 1, 15) AS BIGINT)
-
-Both produce the same non-negative int64 for the same input (verified
-bit-for-bit).  The ``prefix`` acts as the hash-family seed (one prefix
-per MinHash permutation).  For throughput-critical paths that don't
-need oracle parity, swap in ``F.xxhash64`` — same API shape.
+has no DuckDB twin, so the hashes derive from md5.  Each kernel is
+defined once in :mod:`functions.kernels`; these wrappers parse its
+Spark rendering into a Column, so a plan pays one parse instead of a
+py4j round trip per operator.  Arguments are Spark SQL expression text
+(quote arbitrary column names with ``kernels.quote_ident``).
 """
 
 from __future__ import annotations
@@ -19,214 +14,36 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def h60(prefix: str, col: Column) -> Column:
-    """60-bit keyed hash of a string column (seeded by ``prefix``)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), col)), 1, 15), 16, 10
-    ).cast("long")
-
-
-def sql_h60(prefix: str, expr: str) -> str:
-    """DuckDB fragment matching :func:`h60` bit-for-bit."""
-    return f"CAST(CONCAT('0x', SUBSTR(md5(CONCAT('{prefix}', {expr})), 1, 15)) AS BIGINT)"
+from columnar_analytics_engine_spark.functions.kernels import (  # noqa: F401
+    MINHASH_A,
+    MINHASH_B,
+    P31,
+    ROLL_B1,
+    ROLL_B2,
+    render,
+)
 
 
-# -- affine k-family: k hashes from ONE md5 -----------------------------------
-#
-# MinHash needs k ≈ 32 independent hashes per term.  k separate md5 calls
-# cost k digests per *vocabulary term* — harmless on a toy vocab, real
-# money when the vocabulary is billions of shingles.  Instead: one md5,
-# split into two independent 60-bit halves x1/x2, then k affine maps
-#
-#     h_i = ((a_i·x1) mod p + (b_i·x2) mod p + i) mod p,   p = 2^31 − 1
-#
-# (a two-point universal family).  All intermediates stay < 2^62, so the
-# arithmetic is exact int64 on both engines and the DuckDB oracle
-# reproduces it bit-for-bit.  The a/b constants are fixed pseudorandom
-# ints — part of the operator definition, identical in the SQL twin.
-
-P31 = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
-
-import random as _random
-
-_rng = _random.Random(0xC0FFEE)
-MINHASH_A = [_rng.randrange(1, P31) for _ in range(64)]
-MINHASH_B = [_rng.randrange(1, P31) for _ in range(64)]
-del _rng
+def h60(prefix: str, expr: str) -> Column:
+    """60-bit keyed hash of a string expression (seeded by ``prefix``)."""
+    return F.expr(render("h60", "spark", prefix, expr))
 
 
-def affine_hash_cols(col: Column, k: int) -> list[Column]:
-    """k int32-range hash Columns of a string column from one md5.
-
-    Prefer :func:`affine_hash_array` in plans: as k separate Columns the
-    shared ``md5(col)`` sub-expression is INLINED into every member
-    (codegen does not CSE across aggregate result expressions), so a
-    projection of all k costs 2·k digests per row instead of 2.
-    """
-    d = F.md5(col)
-    x1 = F.conv(F.substring(d, 1, 15), 16, 10).cast("long") % F.lit(P31)
-    x2 = F.conv(F.substring(d, 16, 15), 16, 10).cast("long") % F.lit(P31)
-    return [
-        (
-            ((F.lit(MINHASH_A[i]) * x1) % F.lit(P31))
-            + ((F.lit(MINHASH_B[i]) * x2) % F.lit(P31))
-            + F.lit(i)
-        )
-        % F.lit(P31)
-        for i in range(k)
-    ]
+def affine_hash_array(expr: str, k: int) -> Column:
+    """The k-member affine hash family of a string expression as ONE
+    array<long>: a single array-valued expression is one codegen unit,
+    so the two md5 digests are shared across all k members (2 digests
+    per term instead of 2·k)."""
+    return F.expr(render("affine", "spark", expr, k))
 
 
-def affine_hash_array(col: Column | str, k: int) -> Column:
-    """The k-family as ONE array<long> Column — same values as
-    :func:`affine_hash_cols` (element i == column i), but the md5 is
-    evaluated once per row for the whole family: a single array-valued
-    expression is one codegen unit, so the two digest sub-expressions
-    are shared across all k members instead of re-inlined per column.
-    At vocabulary scale (billions of distinct terms × k=32) that is the
-    difference between 2 and 64 digests per term.
-
-    Given a SQL expression STRING the whole family is built as one
-    parsed ``F.expr`` instead of ~40·k py4j Column calls: profiling the
-    bench (round 15) showed DataFrame CONSTRUCTION of the MinHash
-    family dominated by py4j round trips (~0.6 s per invocation just
-    for this function at k=32), pure driver-side stall per guide §5.
-    The parsed tree repeats the two digest sub-expressions textually,
-    but whole-stage codegen's subexpression elimination collapses them
-    inside the single Project, so per-row digest work is unchanged
-    (A/B'd: cold signature build equal within noise, plan shows one
-    md5 per half in the generated code's common-subexpr block)."""
-    if isinstance(col, str):
-        x1 = f"(cast(conv(substring(md5({col}), 1, 15), 16, 10) as bigint) % {P31})"
-        x2 = f"(cast(conv(substring(md5({col}), 16, 15), 16, 10) as bigint) % {P31})"
-        members = ",".join(
-            f"((({MINHASH_A[i]} * {x1}) % {P31}) + (({MINHASH_B[i]} * {x2}) % {P31}) + {i}) % {P31}"
-            for i in range(k)
-        )
-        return F.expr(f"array({members})")
-    d = F.md5(col)
-    x1 = F.conv(F.substring(d, 1, 15), 16, 10).cast("long") % F.lit(P31)
-    x2 = F.conv(F.substring(d, 16, 15), 16, 10).cast("long") % F.lit(P31)
-    return F.array(
-        *[
-            (
-                ((F.lit(MINHASH_A[i]) * x1) % F.lit(P31))
-                + ((F.lit(MINHASH_B[i]) * x2) % F.lit(P31))
-                + F.lit(i)
-            )
-            % F.lit(P31)
-            for i in range(k)
-        ]
-    )
+def token_hash_structs(expr: str) -> Column:
+    """array<struct<a,b>> of per-token 31-bit hash pairs (one md5 each)
+    of a string-array expression."""
+    return F.expr(render("token_hashes", "spark", expr))
 
 
-def sql_affine_hash(expr: str, k: int) -> list[str]:
-    """DuckDB fragments matching :func:`affine_hash_cols` bit-for-bit."""
-    x1 = f"(CAST(CONCAT('0x', SUBSTR(md5({expr}), 1, 15)) AS BIGINT) % {P31})"
-    x2 = f"(CAST(CONCAT('0x', SUBSTR(md5({expr}), 16, 15)) AS BIGINT) % {P31})"
-    return [
-        f"((({MINHASH_A[i]} * {x1}) % {P31}) + (({MINHASH_B[i]} * {x2}) % {P31}) + {i}) % {P31}"
-        for i in range(k)
-    ]
-
-
-# -- numeric n-gram (shingle) hashing -----------------------------------------
-#
-# Shingle queries need a hash per token POSITION over an n-token window.
-# Building the joined window string and md5-ing it costs one string
-# allocation + one digest per position (n-token windows overlap, so each
-# token is re-concatenated and re-hashed n times).  Instead: md5 each
-# token ONCE, split the digest into two independent 31-bit values, and
-# combine windows with two polynomial rolling hashes (bases B1/B2 over
-# GF(p), p = 2^31 − 1); the pair packs into one 62-bit int.  A gram
-# collision needs BOTH 31-bit polynomials to collide (~2^-62) — same
-# collision regime as the 60-bit string hash it replaces.  All
-# intermediates stay < 2^63, so the arithmetic is exact int64 on both
-# engines and the DuckDB oracle replays it bit-for-bit.
-
-ROLL_B1 = 1_000_003
-ROLL_B2 = 999_999_937
-
-
-def token_hash_structs(l: Column | str) -> Column:
-    """array<struct<a,b>> of per-token 31-bit hash pairs (one md5 each).
-
-    Given a SQL expression STRING, the whole transform is built as one
-    parsed ``F.expr`` (round 15, guide §5: the lambda-per-token Column
-    build cost ~0.1 s of py4j round trips per plan construction)."""
-    if isinstance(l, str):
-        a = f"cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint) % {P31}"
-        b = f"cast(conv(substring(md5(t), 16, 15), 16, 10) as bigint) % {P31}"
-        return F.expr(f"transform({l}, t -> named_struct('a', {a}, 'b', {b}))")
-
-    def per_tok(tok: Column) -> Column:
-        d = F.md5(tok)
-        a = F.conv(F.substring(d, 1, 15), 16, 10).cast("long") % F.lit(P31)
-        b = F.conv(F.substring(d, 16, 15), 16, 10).cast("long") % F.lit(P31)
-        return F.struct(a.alias("a"), b.alias("b"))
-
-    return F.transform(l, per_tok)
-
-
-def gram_hash_array(hl: Column | str, n: int) -> Column:
-    """62-bit rolling hash per n-gram position of a token-hash array.
-
-    String input builds the identical expression as one parsed
-    ``F.expr`` (round 15, same rationale as :func:`token_hash_structs`).
-    """
-    if isinstance(hl, str):
-        acc_a = f"element_at({hl}, i).a"
-        acc_b = f"element_at({hl}, i).b"
-        for j in range(1, n):
-            acc_a = f"(({acc_a}) * {ROLL_B1} + element_at({hl}, i + {j}).a) % {P31}"
-            acc_b = f"(({acc_b}) * {ROLL_B2} + element_at({hl}, i + {j}).b) % {P31}"
-        positions = (
-            f"CASE WHEN size({hl}) >= {n} "
-            f"THEN sequence(1, size({hl}) - {n - 1}) "
-            f"ELSE cast(array() as array<int>) END"
-        )
-        return F.expr(
-            f"transform({positions}, i -> ({acc_a}) * 2147483648 + ({acc_b}))"
-        )
-
-    def build(i: Column) -> Column:
-        acc_a = F.element_at(hl, i).getField("a")
-        acc_b = F.element_at(hl, i).getField("b")
-        for j in range(1, n):
-            acc_a = (acc_a * F.lit(ROLL_B1) + F.element_at(hl, i + j).getField("a")) % F.lit(P31)
-            acc_b = (acc_b * F.lit(ROLL_B2) + F.element_at(hl, i + j).getField("b")) % F.lit(P31)
-        return acc_a * F.lit(2_147_483_648) + acc_b
-
-    # Spark's sequence(1, stop) DESCENDS when stop < 1 (it never yields
-    # an empty array), so short inputs need an explicit empty branch —
-    # DuckDB's range() is empty there and the two must agree
-    positions = F.when(
-        F.size(hl) >= n, F.sequence(F.lit(1), F.size(hl) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(positions, build)
-
-
-def sql_token_hash_structs(expr: str) -> str:
-    """DuckDB fragment matching :func:`token_hash_structs` bit-for-bit."""
-    a = f"CAST(CONCAT('0x', SUBSTR(md5(t), 1, 15)) AS BIGINT) % {P31}"
-    b = f"CAST(CONCAT('0x', SUBSTR(md5(t), 16, 15)) AS BIGINT) % {P31}"
-    return f"list_transform({expr}, t -> {{'a': {a}, 'b': {b}}})"
-
-
-def sql_gram_hash_array(hl_expr: str, n: int) -> str:
-    """DuckDB fragment matching :func:`gram_hash_array` bit-for-bit.
-
-    Emits ``list_transform(range(1, len(hl) - (n-2)), i -> ...)`` — the
-    range upper bound is exclusive, so positions run 1..len-n+1 exactly
-    like the Spark ``sequence``.
-    """
-
-    def roll(field: str, base: int) -> str:
-        acc = f"struct_extract({hl_expr}[i], '{field}')"
-        for j in range(1, n):
-            acc = f"(({acc}) * {base} + struct_extract({hl_expr}[i+{j}], '{field}')) % {P31}"
-        return acc
-
-    gram = f"({roll('a', ROLL_B1)}) * 2147483648 + ({roll('b', ROLL_B2)})"
-    return f"list_transform(range(1, len({hl_expr}) - {n - 2}), i -> {gram})"
+def gram_hash_array(expr: str, n: int) -> Column:
+    """62-bit rolling hash per n-gram position of a token-hash array
+    expression (see :func:`token_hash_structs`)."""
+    return F.expr(render("gram_hashes", "spark", expr, n))

@@ -1,10 +1,11 @@
 """Text-analysis primitives for large-scale training-data pipelines.
 
-All functions are pure ``pyspark.sql.functions`` compositions — JVM-side,
-whole-stage-codegen'd, no Python UDFs — so they run at full scan speed on
-100 TB of documents.  Tokenization is the shared contract: whitespace
-split of the trimmed text, mirrored exactly by the DuckDB oracle
-(``regexp_split_to_array(trim(text), '\\s+')``).
+All functions are JVM-side SQL expressions — whole-stage-codegen'd, no
+Python UDFs — so they run at full scan speed on 100 TB of documents.
+Tokenization is the shared contract: whitespace split of the trimmed
+text.  The tokenizer, fingerprint, stopword and language-ID kernels are
+defined once in :mod:`functions.kernels` and take the text column's
+NAME (quoted for you); the DuckDB oracles render the same kernels.
 """
 
 from __future__ import annotations
@@ -12,37 +13,33 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Tiny deterministic stopword lists per language for the language-ID
-# heuristic and stopword-ratio quality signal.  Intentionally small: the
-# point is the operator shape (argmax over per-language evidence counts),
-# not lexicon quality.
-STOPWORDS: dict[str, tuple[str, ...]] = {
-    "en": ("the", "a", "of", "and", "to", "is", "in"),
-    "fr": ("le", "la", "de", "et", "les", "des", "un"),
-    "es": ("el", "la", "de", "y", "los", "que", "un"),
-    "de": ("der", "die", "das", "und", "ist", "ein", "nicht"),
-    "zh": ("的", "是", "了", "在", "我", "有", "和"),
-}
-
-# Deterministic tie-break priority for argmax (must match oracle SQL).
-LANG_PRIORITY: tuple[str, ...] = ("en", "fr", "es", "de", "zh")
+from columnar_analytics_engine_spark.functions.kernels import (  # noqa: F401
+    LANG_PRIORITY,
+    STOPWORDS,
+    quote_ident,
+    render,
+)
 
 
-def tokens(text: Column) -> Column:
+def _kernel(kernel: str, col: str, *args) -> Column:
+    return F.expr(render(kernel, "spark", quote_ident(col), *args))
+
+
+def tokens(col: str) -> Column:
     """Whitespace tokens of the trimmed text (the tokenizer contract)."""
-    return F.split(F.trim(text), r"\s+")
+    return _kernel("tokens", col)
 
 
-def distinct_tokens(text: Column) -> Column:
-    return F.array_distinct(tokens(text))
+def distinct_tokens(col: str) -> Column:
+    return F.array_distinct(tokens(col))
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text)).cast("long")
+def token_count(col: str) -> Column:
+    return F.size(tokens(col)).cast("long")
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(distinct_tokens(text)).cast("long")
+def distinct_token_count(col: str) -> Column:
+    return F.size(distinct_tokens(col)).cast("long")
 
 
 # GPT-2-style pretokenizer pattern, restricted to syntax with identical
@@ -65,32 +62,14 @@ def char_count(text: Column) -> Column:
     return F.length(F.trim(text)).cast("long")
 
 
-def non_ws_char_count(text: Column) -> Column:
+def non_ws_char_count(col: str) -> Column:
     """Characters excluding all whitespace (numerator for avg token len)."""
-    return F.length(F.regexp_replace(F.trim(text), r"\s+", "")).cast("long")
+    return _kernel("non_ws_chars", col).cast("long")
 
 
-def _sql_stopword_hits(text: str, lang: str) -> str:
-    """Spark-SQL text of :func:`stopword_hits` (str-input fast path)."""
-    words = ", ".join("'" + w.replace("'", "\\'") + "'" for w in STOPWORDS[lang])
-    return (
-        f"cast(size(filter(split(trim({text}), '\\\\s+'), "
-        f"tok -> array_contains(array({words}), tok))) as bigint)"
-    )
-
-
-def stopword_hits(text: Column | str, lang: str) -> Column:
-    """Occurrences (not distinct) of ``lang`` stopwords among tokens.
-
-    String input builds the identical expression as one parsed
-    ``F.expr`` — the lambda-based Column build costs ~15 py4j round
-    trips per language per plan construction (round 15, guide §5)."""
-    if isinstance(text, str):
-        return F.expr(_sql_stopword_hits(text, lang))
-    stoplist = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(
-        F.filter(tokens(text), lambda tok: F.array_contains(stoplist, tok))
-    ).cast("long")
+def stopword_hits(col: str, lang: str) -> Column:
+    """Occurrences (not distinct) of ``lang`` stopwords among tokens."""
+    return _kernel("stopword_hits", col, lang)
 
 
 def punct_count(text: Column) -> Column:
@@ -98,47 +77,25 @@ def punct_count(text: Column) -> Column:
     return F.length(F.regexp_replace(text, r"[^.,;:!?]", "")).cast("long")
 
 
-def language_scores(text: Column | str) -> dict[str, Column]:
-    return {lang: stopword_hits(text, lang) for lang in LANG_PRIORITY}
+def language_scores(col: str) -> dict[str, Column]:
+    return {lang: stopword_hits(col, lang) for lang in LANG_PRIORITY}
 
 
-def predict_language(text: Column | str) -> Column:
+def predict_language(col: str) -> Column:
     """Argmax of per-language stopword evidence with the fixed
     LANG_PRIORITY tie-break — a deterministic n-gram-style language-ID
-    heuristic (lexicon-based; oracle replicates the same CASE chain).
-
-    String input assembles the whole CASE chain as one parsed
-    ``F.expr`` (round 15, guide §5).  The text repeats each score
-    expression per comparison, exactly as the Column build repeats the
-    shared Column references; whole-stage codegen's subexpression
-    elimination collapses both the same way."""
-    langs = list(LANG_PRIORITY)
-    if isinstance(text, str):
-        s = {lang: _sql_stopword_hits(text, lang) for lang in langs}
-        arms = []
-        for i, lang in enumerate(langs[:-1]):
-            cond = " AND ".join(
-                f"({s[lang]}) >= ({s[other]})" for other in langs[i + 1 :]
-            )
-            arms.append(f"WHEN {cond} THEN '{lang}'")
-        return F.expr(
-            "CASE " + " ".join(arms) + f" ELSE '{langs[-1]}' END"
-        )
-    scores = language_scores(text)
-    expr = None
-    for i, lang in enumerate(langs[:-1]):
-        rest = langs[i + 1 :]
-        cond = None
-        for other in rest:
-            c = scores[lang] >= scores[other]
-            cond = c if cond is None else (cond & c)
-        expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
-    return expr.otherwise(langs[-1])
+    heuristic (lexicon-based).  The CASE chain repeats each score
+    expression per comparison; whole-stage codegen's subexpression
+    elimination evaluates each once."""
+    q = quote_ident(col)
+    scores = {
+        lang: f"({render('stopword_hits', 'spark', q, lang)})" for lang in LANG_PRIORITY
+    }
+    return F.expr(render("langid", "spark", scores))
 
 
-def fingerprint(text: Column) -> Column:
+def fingerprint(col: str) -> Column:
     """Canonical document fingerprint: md5 of the lowercased,
     whitespace-collapsed text.  Identical duplicates (modulo case and
     spacing) collide; stable across engines for oracle checks."""
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.md5(normalized)
+    return _kernel("fingerprint", col)

@@ -36,46 +36,45 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# stat identity -> ns-column list.  ``read_table`` runs on every query
-# INVOCATION (the bench times 3 runs per query), and the pyarrow footer
-# open below is driver-side, single-threaded work paid per call; for
-# the fixed benchmark tables the answer only changes when the file
-# changes, so key the memo on the stat identity (guide §5: keep the
-# driver out of the per-run path).
-_NS_FIELDS_CACHE: dict[tuple, list[str]] = {}
+# path -> (stat identity, ns-column list).  ``read_table`` runs on every
+# query INVOCATION (the bench times 3 runs per query), and the pyarrow
+# footer open below is driver-side, single-threaded work paid per call;
+# for the fixed benchmark tables the answer only changes when a file
+# changes, so memoize it under the stat identity (keeps the driver out
+# of the per-run path).  One entry per path: a new identity replaces the
+# old one.
+_NS_FIELDS_CACHE: dict[str, tuple[tuple, list[str]]] = {}
 
 
-def _first_part(p: str) -> str | None:
-    """The first data part file of a parquet file-or-directory path —
-    the file schema inspection actually reads (None: empty dir)."""
+def _part_files(p: str) -> list[str]:
+    """The data part files of a parquet file-or-directory path, sorted
+    (a plain file is its own only part)."""
     if not os.path.isdir(p):
-        return p
-    parts = [
-        f
+        return [p]
+    return [
+        os.path.join(p, f)
         for f in sorted(os.listdir(p))
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     ]
-    return os.path.join(p, parts[0]) if parts else None
 
 
 def _stat_identity(path: str) -> tuple | None:
-    """Stat-based identity of a parquet file/directory: the path stat
-    plus the first part FILE's stat, so both dirent changes (files
-    added/removed/renamed — every Spark-style rewrite) and an in-place
-    rewrite of the inspected part file invalidate memo entries keyed
-    on it (ADVICE r14)."""
+    """Stat-based identity of a parquet file/directory (None: missing or
+    no part files): the path's own stat plus, over EVERY part file, the
+    count, the newest mtime and the total size — so files
+    added/removed/renamed and an in-place rewrite of any part file
+    change it."""
     try:
         st = os.stat(path)
-        fp = _first_part(path)
-        if fp is None:
-            return None
-        stf = os.stat(fp)
-        return (
-            os.path.abspath(path), st.st_mtime_ns, st.st_size,
-            os.path.abspath(fp), stf.st_mtime_ns, stf.st_size,
-        )
+        parts = [os.stat(f) for f in _part_files(path)]
     except OSError:
         return None
+    if not parts:
+        return None
+    return (
+        st.st_mtime_ns, st.st_size, len(parts),
+        max(p.st_mtime_ns for p in parts), sum(p.st_size for p in parts),
+    )
 
 
 def _ns_timestamp_fields(path: str) -> list[str]:
@@ -88,19 +87,20 @@ def _ns_timestamp_fields(path: str) -> list[str]:
     import pyarrow.parquet as pq
     import pyarrow.types as pat
 
-    # key on the stat of the FILE actually inspected (via
-    # _stat_identity), not just the directory: a part file rewritten in
-    # place (same name) leaves the directory dirents — and thus the
-    # directory stat — unchanged, so a directory-keyed memo could serve
-    # a stale column list (ADVICE r14)
-    cache_key = _stat_identity(path)
-    if cache_key is not None and cache_key in _NS_FIELDS_CACHE:
-        return _NS_FIELDS_CACHE[cache_key]
+    # the identity covers the part files' stats, not just the
+    # directory's: a part file rewritten in place (same name) leaves the
+    # directory stat unchanged
+    key = os.path.abspath(path)
+    ident = _stat_identity(path)
+    hit = _NS_FIELDS_CACHE.get(key)
+    if ident is not None and hit is not None and hit[0] == ident:
+        return hit[1]
 
     def _compute() -> list[str]:
-        file_path = _first_part(path)
-        if file_path is None:
+        parts = _part_files(path)
+        if not parts:
             return []
+        file_path = parts[0]
         schema = pq.read_schema(file_path)
         ns_names = {
             f.name
@@ -122,12 +122,12 @@ def _ns_timestamp_fields(path: str) -> list[str]:
         return sorted(ns_names & int64_cols)
 
     result = _compute()
-    if cache_key is not None:
-        _NS_FIELDS_CACHE[cache_key] = result
+    if ident is not None:
+        _NS_FIELDS_CACHE[key] = (ident, result)
     return result
 
 
-# (applicationId, table stat identity) -> resolved source DataFrame.
+# path -> ((applicationId, table stat identity), resolved DataFrame).
 # ``spark.read.parquet`` lists the directory and infers the schema from
 # a footer on EVERY call — ~80 ms of driver-side work per table per
 # invocation (measured round 15: join_star_tpch_q5 re-resolved its six
@@ -137,8 +137,9 @@ def _ns_timestamp_fields(path: str) -> list[str]:
 # caching: no rows are materialized, every action recomputes from the
 # parquet files, and the memo invalidates when the table's stat
 # identity changes (file added/removed/rewritten) or the session is a
-# different application.
-_TABLE_DF_CACHE: dict[tuple, DataFrame] = {}
+# different application; the new entry replaces the old one, so the
+# memo holds at most one DataFrame per table path.
+_TABLE_DF_CACHE: dict[str, tuple[tuple, DataFrame]] = {}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -150,17 +151,24 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     projection pushdown happen when the caller filters/selects.
     Nanosecond timestamps are truncated to Spark's microsecond
     resolution on read.
+
+    The resolved DataFrame is memoized per table path while the files'
+    stat identity and the Spark application are unchanged: callers
+    share ONE DataFrame instance across calls.  Never ``persist()`` the
+    returned frame (that would cache the table for every caller);
+    derive a new DataFrame instead.
     """
     from pyspark.sql import functions as F
 
     path = table_path(sf_dir, name)
+    key = os.path.abspath(path)
     ident = _stat_identity(path)
-    cache_key = None
+    memo_id = None
     if ident is not None:
-        cache_key = (spark.sparkContext.applicationId,) + ident
-        cached = _TABLE_DF_CACHE.get(cache_key)
-        if cached is not None:
-            return cached
+        memo_id = (spark.sparkContext.applicationId,) + ident
+        hit = _TABLE_DF_CACHE.get(key)
+        if hit is not None and hit[0] == memo_id:
+            return hit[1]
     ns_cols = _ns_timestamp_fields(path)
     # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) would otherwise be
     # inferred as TIMESTAMP_NTZ, which Spark's epoch/tz functions reject;
@@ -185,8 +193,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.set(k, old)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    if cache_key is not None:
-        _TABLE_DF_CACHE[cache_key] = df
+    if memo_id is not None:
+        _TABLE_DF_CACHE[key] = (memo_id, df)
     return df
 
 
@@ -374,10 +382,9 @@ def write_shuffled(
     from pyspark.sql import functions as F
 
     from columnar_analytics_engine_spark.functions.hashing import h60
+    from columnar_analytics_engine_spark.functions.kernels import quote_ident
 
-    rk = h60(
-        f"shuffle{seed}:", F.coalesce(F.col(key_col).cast("string"), F.lit("\x00"))
-    )
+    rk = h60(f"shuffle{seed}:", f"COALESCE(CAST({quote_ident(key_col)} AS STRING), chr(0))")
     out = (
         df.withColumn("_shuffle_rank", rk)
         .withColumn("shard_id", F.pmod(F.col("_shuffle_rank"), F.lit(n_files)).cast("int"))

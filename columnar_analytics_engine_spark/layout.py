@@ -29,7 +29,9 @@ plannable:
   pruning from a single layout.  ``queries/layout.py`` registers the
   comparison as a hash-verified query.
 
-All arithmetic is JVM column expressions (whole-stage codegen); the
+Bins and the bit interleave are the ``range_bin``/``rank_bin``/``morton``
+kernels of ``functions/kernels.py`` (the DuckDB oracles render the same
+templates), parsed into JVM expressions (whole-stage codegen); the
 only aggregates are the 1-row exact min/max (broadcast in-plan) and
 bucket-count-sized groupBys.
 """
@@ -39,58 +41,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def scaled_bin(c: Column, mn: Column, mx: Column, levels: int) -> Column:
-    """Range-bin ``c`` into ``0..levels`` (inclusive) given exact
-    [``mn``, ``mx``] bounds: ``floor((c - mn) / (mx - mn) * levels)``,
-    clamped.  Every operation is a single IEEE-754 double op, so the
-    result is bit-identical across engines (the determinism the SQL
-    oracles rely on)."""
-    frac = (c.cast("double") - mn) / F.greatest(mx - mn, F.lit(1e-300))
-    return F.least(
-        F.lit(levels),
-        F.greatest(F.lit(0), F.floor(frac * F.lit(float(levels))).cast("long")),
-    )
+from columnar_analytics_engine_spark.functions.kernels import quote_ident, render
 
 
-def morton_expr(bins: list[Column], bits: int) -> Column:
-    """Interleave the low ``bits`` bits of each bin (column i owns
-    output bit positions ``bit*len(bins) + i``) into one Z-order /
-    Morton value — pure shift/mask JVM expressions."""
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for i, b in enumerate(bins):
-            z = z + F.shiftleft(
-                F.shiftright(b, bit).bitwiseAND(F.lit(1)),
-                bit * len(bins) + i,
-            )
-    return z
-
-
-# -- Spark-SQL text twins of scaled_bin / morton_expr (round 15) --------------
-#
-# The Column builders above cost hundreds of py4j round trips per plan
-# construction (bits × cols shift/mask terms, each term re-referencing
-# a ~8-op bin subtree) — a per-invocation driver stall (guide §5).  The
-# bucket builders assemble the identical expressions as ONE parsed
-# F.expr from these text twins; values and schemas are A/B-verified
-# equal (the repeated bin text collapses under codegen subexpression
-# elimination exactly like the shared Column references did).
-
-def _sql_scaled_bin(c: str, mn: str, mx: str, levels: int) -> str:
-    return (
-        f"least({levels}, greatest(0, cast(floor(((cast({c} as double) - {mn})"
-        f" / greatest({mx} - {mn}, 1e-300)) * {float(levels)!r}D) as bigint)))"
-    )
-
-
-def _sql_morton(bins: list[str], bits: int) -> str:
-    terms = " + ".join(
-        f"shiftleft((shiftright(({b}), {bit}) & 1), {bit * len(bins) + i})"
-        for bit in range(bits)
-        for i, b in enumerate(bins)
-    )
-    return f"cast(0 as bigint) + {terms}"
+def _bins(cols: list[str], levels: int) -> list[str]:
+    """Spark SQL range bins of ``cols`` against the ``_mn_``/``_mx_``
+    columns :func:`_with_minmax` joins alongside."""
+    return [
+        render(
+            "range_bin", "spark", quote_ident(c),
+            quote_ident(f"_mn_{c}"), quote_ident(f"_mx_{c}"), levels,
+        )
+        for c in cols
+    ]
 
 
 def _with_minmax(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -108,10 +71,9 @@ def with_linear_bucket(df: DataFrame, col: str, n_buckets: int) -> DataFrame:
     ``n_buckets`` buckets (the model of a single-column clustered
     write, e.g. ``io.write_sorted``)."""
     j = _with_minmax(df, [col])
-    return j.withColumn(
-        "_bucket",
-        F.expr(_sql_scaled_bin(col, f"_mn_{col}", f"_mx_{col}", n_buckets - 1)),
-    ).drop(f"_mn_{col}", f"_mx_{col}")
+    return j.withColumn("_bucket", F.expr(_bins([col], n_buckets - 1)[0])).drop(
+        f"_mn_{col}", f"_mx_{col}"
+    )
 
 
 def with_zorder_bucket(
@@ -130,26 +92,21 @@ def with_zorder_bucket(
     if width > 62:
         raise ValueError("bits * len(cols) must be <= 62")
     j = _with_minmax(df, cols)
-    bins = [
-        _sql_scaled_bin(c, f"_mn_{c}", f"_mx_{c}", (1 << bits) - 1)
-        for c in cols
-    ]
-    return j.withColumn(
-        "_bucket",
-        F.expr(f"shiftright({_sql_morton(bins, bits)}, {width - k})"),
-    ).drop(*[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols])
+    z = render("morton", "spark", _bins(cols, (1 << bits) - 1), bits)
+    return j.withColumn("_bucket", F.shiftright(F.expr(z), width - k)).drop(
+        *[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols]
+    )
 
 
-def rank_bin(c: Column, cuts: list[float]) -> Column:
-    """Quantile-rank bin: the number of ``cuts`` at or below ``c`` —
+def rank_bin(col: str, cuts: list[float]) -> Column:
+    """Quantile-rank bin: the number of ``cuts`` at or below ``col`` —
     0..len(cuts), evaluated as one higher-order filter over a literal
     cut array (JVM-side, no join).  With equi-probable cuts every bin
     holds ~the same ROW COUNT regardless of the value distribution —
-    the skew-robust twin of :func:`scaled_bin` (whose equal-WIDTH bins
-    collapse to one hot bin under power-law columns, destroying the
-    interleave's balance)."""
-    arr = F.array(*[F.lit(float(x)) for x in cuts])
-    return F.size(F.filter(arr, lambda x: c.cast("double") >= x)).cast("long")
+    the skew-robust alternative to the ``range_bin`` kernel (whose
+    equal-WIDTH bins collapse to one hot bin under power-law columns,
+    destroying the interleave's balance)."""
+    return F.expr(render("rank_bin", "spark", quote_ident(col), cuts))
 
 
 def quantile_cuts(
@@ -190,22 +147,18 @@ def zorder_frame(
         raise ValueError("bits * len(cols) must be <= 62")
     if method == "linear":
         j = _with_minmax(df, cols)
-        bins = [
-            _sql_scaled_bin(c, f"_mn_{c}", f"_mx_{c}", (1 << bits) - 1)
-            for c in cols
-        ]
+        bins = _bins(cols, (1 << bits) - 1)
         drop = [f"_mn_{c}" for c in cols] + [f"_mx_{c}" for c in cols]
-        z = F.expr(_sql_morton(bins, bits))
     elif method == "quantile":
         if bits > 8:
             raise ValueError("quantile binning caps bits at 8 (256 bins)")
         cuts = quantile_cuts(df, cols, bits)
         j = df
-        z = morton_expr([rank_bin(F.col(c), cuts[c]) for c in cols], bits)
+        bins = [render("rank_bin", "spark", quote_ident(c), cuts[c]) for c in cols]
         drop = []
     else:
         raise ValueError(f"unknown binning method {method!r}")
-    out = j.withColumn("_z", z)
+    out = j.withColumn("_z", F.expr(render("morton", "spark", bins, bits)))
     if drop:
         out = out.drop(*drop)
     return (

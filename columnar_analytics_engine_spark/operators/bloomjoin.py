@@ -29,13 +29,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.functions.hashing import h60
+from columnar_analytics_engine_spark.functions.kernels import quote_ident
 
 BLOOM_BITS = 4096  # bitmap size (64 longs); size for n_keys*k/ln2 bits
 BLOOM_K = 4        # hash functions per key
 
 
-def _positions(key: Column, n_bits: int, k: int) -> list[Column]:
-    s = key.cast("string")
+def _positions(key_col: str, n_bits: int, k: int) -> list[Column]:
+    s = f"CAST({quote_ident(key_col)} AS STRING)"
     return [F.pmod(h60(f"bl{i}:", s), F.lit(n_bits)) for i in range(k)]
 
 
@@ -68,7 +69,7 @@ def bloom_bitmap(
     """
     n_words = n_bits // 64
     pos = small.select(
-        F.explode(F.array(*_positions(F.col(key_col), n_bits, k))).alias("p")
+        F.explode(F.array(*_positions(key_col, n_bits, k))).alias("p")
     )
     words = (
         pos.select(
@@ -88,10 +89,10 @@ def bloom_bitmap(
     return sparse.select(dense.alias("_bloom"))
 
 
-def bloom_might_contain(key: Column, bitmap_col: Column, n_bits: int = BLOOM_BITS, k: int = BLOOM_K) -> Column:
-    """True iff all k bit positions of ``key`` are set in the bitmap."""
+def bloom_might_contain(key_col: str, bitmap_col: Column, n_bits: int = BLOOM_BITS, k: int = BLOOM_K) -> Column:
+    """True iff all k bit positions of column ``key_col`` are set in the bitmap."""
     tests = []
-    for p in _positions(key, n_bits, k):
+    for p in _positions(key_col, n_bits, k):
         word = F.element_at(bitmap_col, (p / 64).cast("int") + 1)
         tests.append(word.bitwiseAND(_bit_value(p)) != 0)
     return reduce(lambda a, b: a & b, tests)
@@ -113,7 +114,7 @@ def bloom_prefiltered_join(
     bitmap = bloom_bitmap(small, key_col, n_bits, k)
     reduced = (
         big.join(F.broadcast(bitmap))
-        .filter(bloom_might_contain(F.col(key_col), F.col("_bloom"), n_bits, k))
+        .filter(bloom_might_contain(key_col, F.col("_bloom"), n_bits, k))
         .drop("_bloom")
     )
     return reduced.join(small, key_col)

@@ -49,13 +49,11 @@ def cdc_chunks(
     modulus = 1 << boundary_bits
     tok = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "token"),
+        F.posexplode(tokens(text_col)).alias("pos", "token"),
     )
     # a token whose hash fires ENDS its chunk: the chunk id of a token is
     # the number of boundary tokens strictly before it
-    flag = (F.pmod(h60(CDC_SEED_PREFIX, F.col("token")), F.lit(modulus)) == 0).cast(
-        "long"
-    )
+    flag = (F.pmod(h60(CDC_SEED_PREFIX, "token"), F.lit(modulus)) == 0).cast("long")
     w_prev = (
         W.partitionBy("doc_id")
         .orderBy("pos")

@@ -37,7 +37,14 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_analytics_engine_spark.functions.kernels import render
 from columnar_analytics_engine_spark.io import read_table
+
+# DuckDB text of the text kernels over the documents' ``text`` column,
+# shared by the oracles
+SQL_TOKENS = render("tokens", "duckdb", "text")
+SQL_FINGERPRINT = render("fingerprint", "duckdb", "text")
+SQL_NON_WS_CHARS = render("non_ws_chars", "duckdb", "text")
 
 
 @dataclass

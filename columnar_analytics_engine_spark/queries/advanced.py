@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.functions.caching import persist_once
-from columnar_analytics_engine_spark.functions.hashing import h60, sql_h60
+from columnar_analytics_engine_spark.functions.hashing import h60
+from columnar_analytics_engine_spark.functions.kernels import render
 from columnar_analytics_engine_spark.queries._util import (
     QuerySpec,
     exact_sum,
@@ -1672,7 +1673,7 @@ def privacy_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     per_lang = docs.groupBy("lang").agg(F.count("*").alias("true_n"))
-    u = (h60("dp:", F.col("lang")).cast("double") + F.lit(0.5)) / F.lit(_H60_RANGE)
+    u = (h60("dp:", "lang").cast("double") + F.lit(0.5)) / F.lit(_H60_RANGE)
     centered = u - F.lit(0.5)
     sign = F.when(centered >= 0, F.lit(1.0)).otherwise(F.lit(-1.0))
     ln_micro = F.round(
@@ -1708,7 +1709,7 @@ QUERIES["privacy_dp_release"] = QuerySpec(
     ),
     n AS (
       SELECT lang, true_n,
-             ({sql_h60('dp:', 'lang')} + 0.5) / {_H60_RANGE} AS u
+             ({render('h60', 'duckdb', 'dp:', 'lang')} + 0.5) / {_H60_RANGE} AS u
       FROM per_lang
     ),
     lap AS (

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.functions import text as X
 from columnar_analytics_engine_spark.functions.caching import persist_once
-from columnar_analytics_engine_spark.queries._util import QuerySpec, t
+from columnar_analytics_engine_spark.queries._util import SQL_TOKENS, QuerySpec, t
 
 _MICRO = 1e6  # micro-nat grid for ln() terms
 
@@ -68,7 +68,7 @@ def _nb_predictions(docs: DataFrame) -> DataFrame:
 
     # explode_outer so null-text train docs still count toward doc totals
     tr_tok = train.select(
-        "doc_id", "lang", F.explode_outer(X.tokens(F.col("text"))).alias("token")
+        "doc_id", "lang", F.explode_outer(X.tokens("text")).alias("token")
     )
     # the (token, lang) count table feeds THREE consumers (class totals
     # n_l, log-weights w, vocabulary) — plan-keyed persisted so the
@@ -107,7 +107,7 @@ def _nb_predictions(docs: DataFrame) -> DataFrame:
     # would execute once per consumer
     te_cnt = persist_once(
         test.select(
-            "doc_id", "actual", F.explode_outer(X.tokens(F.col("text"))).alias("token")
+            "doc_id", "actual", F.explode_outer(X.tokens("text")).alias("token")
         )
         .groupBy("doc_id", "actual", "token")
         .agg(F.count("*").alias("cnt"))
@@ -160,14 +160,12 @@ def classifier_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
-
 _SQL_NB_CONFUSION = f"""
 WITH train AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
 test AS (SELECT doc_id, lang AS actual, text FROM documents WHERE doc_id % 2 = 1),
 tr_tok AS (
   SELECT doc_id, lang,
-         unnest(COALESCE({_SQL_TOKENS}, [NULL]::VARCHAR[])) AS token
+         unnest(COALESCE({SQL_TOKENS}, [NULL]::VARCHAR[])) AS token
   FROM train),
 c AS (SELECT token, lang, COUNT(*) AS c FROM tr_tok
       WHERE token IS NOT NULL GROUP BY 1, 2),
@@ -186,7 +184,7 @@ w AS (SELECT token, lang, CAST(ROUND(LN(CAST(c + 1 AS DOUBLE)) * 1e6) AS BIGINT)
 te_cnt AS (
   SELECT doc_id, actual, token, COUNT(*) AS cnt FROM (
     SELECT doc_id, actual,
-           unnest(COALESCE({_SQL_TOKENS}, [NULL]::VARCHAR[])) AS token
+           unnest(COALESCE({SQL_TOKENS}, [NULL]::VARCHAR[])) AS token
     FROM test) x
   GROUP BY 1, 2, 3
 ),

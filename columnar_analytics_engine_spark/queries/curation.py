@@ -45,14 +45,16 @@ from columnar_analytics_engine_spark.functions.caching import persist_once
 from columnar_analytics_engine_spark.functions.hashing import (
     gram_hash_array,
     h60,
-    sql_gram_hash_array,
-    sql_h60,
-    sql_token_hash_structs,
     token_hash_structs,
 )
-from columnar_analytics_engine_spark.queries._util import QuerySpec, t
+from columnar_analytics_engine_spark.functions.kernels import render
+from columnar_analytics_engine_spark.queries._util import (
+    SQL_FINGERPRINT,
+    SQL_TOKENS,
+    QuerySpec,
+    t,
+)
 
-_SQL_TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 
 # ---------------------------------------------------------------------------
 # duplicated-passage detection (exact-substring dedup at passage granularity)
@@ -82,7 +84,7 @@ def dedup_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     # token array materialized once per row — lambda args would re-inline
-    toks = docs.select("doc_id", X.tokens(F.col("text")).alias("l")).filter(
+    toks = docs.select("doc_id", X.tokens("text").alias("l")).filter(
         F.size("l") >= _PASSAGE_W
     )
     hashed = toks.select("doc_id", token_hash_structs("l").alias("hl"))
@@ -115,14 +117,14 @@ def dedup_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_DUPLICATE_PASSAGES = f"""
 WITH f AS (
-  SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-  WHERE len({_SQL_TOKENS}) >= {_PASSAGE_W}
+  SELECT doc_id, {SQL_TOKENS} AS l FROM documents
+  WHERE len({SQL_TOKENS}) >= {_PASSAGE_W}
 ),
 h AS (
-  SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM f
+  SELECT doc_id, {render('token_hashes', 'duckdb', 'l')} AS hl FROM f
 ),
 spans AS (
-  SELECT doc_id, unnest({sql_gram_hash_array('hl', _PASSAGE_W)}) AS gh FROM h
+  SELECT doc_id, unnest({render('gram_hashes', 'duckdb', 'hl', _PASSAGE_W)}) AS gh FROM h
 ),
 pairs AS (
   SELECT doc_id, gh, COUNT(*) AS cnt FROM spans GROUP BY doc_id, gh
@@ -170,7 +172,7 @@ def training_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     per_src = persist_once(
-        docs.select("source", X.token_count(F.col("text")).alias("n_tok"))
+        docs.select("source", X.token_count("text").alias("n_tok"))
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("n_tokens"))
     )
@@ -200,7 +202,7 @@ _SQL_MIXTURE_WEIGHTS = f"""
 WITH per_src AS (
   SELECT source,
          COUNT(*) AS n_docs,
-         SUM(CAST(len({_SQL_TOKENS}) AS BIGINT)) AS n_tokens
+         SUM(CAST(len({SQL_TOKENS}) AS BIGINT)) AS n_tokens
   FROM documents GROUP BY source
 ),
 tot AS (SELECT SUM(n_tokens) AS total_tokens, COUNT(*) AS n_sources FROM per_src)
@@ -440,7 +442,7 @@ def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan speed (pure regexp projection, no shuffle)."""
     docs = t(spark, sf_dir, "documents")
     txt = F.col("text")
-    n_ws = X.token_count(txt)
+    n_ws = X.token_count("text")
     n_bpe = X.bpe_ish_token_count(txt)
     return docs.select(
         "doc_id",
@@ -458,10 +460,10 @@ _SQL_BPE_PAT = (
 
 _SQL_BPE_TOKEN_STATS = f"""
 SELECT doc_id,
-       CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_ws_tokens,
+       CAST(len({SQL_TOKENS}) AS BIGINT) AS n_ws_tokens,
        CAST(len(regexp_extract_all(text, '{_SQL_BPE_PAT}')) AS BIGINT) AS n_bpe_tokens,
        CAST(len(regexp_extract_all(text, '{_SQL_BPE_PAT}')) AS DOUBLE)
-         / CAST(len({_SQL_TOKENS}) AS DOUBLE) AS bpe_per_ws_token
+         / CAST(len({SQL_TOKENS}) AS DOUBLE) AS bpe_per_ws_token
 FROM documents
 ORDER BY doc_id
 """
@@ -490,7 +492,7 @@ def pipeline_attrition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     w_fp = W.partitionBy("fp").orderBy("doc_id")
     s1 = persist_once(
-        docs.withColumn("fp", X.fingerprint(F.col("text")))
+        docs.withColumn("fp", X.fingerprint("text"))
         .withColumn("_rn", F.row_number().over(w_fp))
         .filter(F.col("_rn") == 1)
         .drop("fp", "_rn")
@@ -509,7 +511,7 @@ def pipeline_attrition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_nd").isNull().alias("k2"),
             (
                 F.col("_nd").isNull()
-                & (X.token_count(F.col("text")) >= 10)
+                & (X.token_count("text") >= 10)
             ).alias("k3"),
         )
     )
@@ -550,11 +552,10 @@ def _sql_attrition() -> str:
     from columnar_analytics_engine_spark.operators import dedup as D
     from columnar_analytics_engine_spark.queries.llm import _minhash_lsh_sql
 
-    fp = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
     return f"""
 WITH s1 AS (
   SELECT * FROM (
-    SELECT d.*, ROW_NUMBER() OVER (PARTITION BY {fp} ORDER BY doc_id) AS _rn
+    SELECT d.*, ROW_NUMBER() OVER (PARTITION BY {SQL_FINGERPRINT} ORDER BY doc_id) AS _rn
     FROM documents d) x
   WHERE _rn = 1
 ),
@@ -564,7 +565,7 @@ s2 AS (
     SELECT d2 FROM pr
     WHERE d1 IN (SELECT doc_id FROM s1) AND d2 IN (SELECT doc_id FROM s1))
 ),
-s3 AS (SELECT * FROM s2 WHERE len({_SQL_TOKENS}) >= 10),
+s3 AS (SELECT * FROM s2 WHERE len({SQL_TOKENS}) >= 10),
 c AS (
   SELECT (SELECT COUNT(*) FROM documents) AS c0,
          (SELECT COUNT(*) FROM s1) AS c1,
@@ -610,7 +611,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 32-byte fingerprint — no token explosion, no pairwise work.
     """
     docs = t(spark, sf_dir, "documents").select(
-        "doc_id", X.fingerprint(F.col("text")).alias("fp")
+        "doc_id", X.fingerprint("text").alias("fp")
     )
     hist = (
         docs.filter(F.col("doc_id") % _INC_MOD != 0)
@@ -642,7 +643,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_INCREMENTAL = f"""
 WITH fp AS (
   SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
+         {SQL_FINGERPRINT} AS fp
   FROM documents
 ),
 hist AS (
@@ -758,7 +759,7 @@ def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     same semantics, no single-partition window.
     """
     docs = t(spark, sf_dir, "documents")
-    pri = h60("cap:", F.col("doc_id").cast("string"))
+    pri = h60("cap:", "CAST(doc_id AS STRING)")
     w = W.partitionBy("source").orderBy(pri, "doc_id")
     return (
         docs.select("source", "doc_id", pri.alias("priority"))
@@ -774,7 +775,7 @@ WITH ranked AS (
   SELECT source, doc_id,
          ROW_NUMBER() OVER (
            PARTITION BY source
-           ORDER BY {sql_h60("cap:", "CAST(doc_id AS VARCHAR)")}, doc_id
+           ORDER BY {render('h60', 'duckdb', 'cap:', 'CAST(doc_id AS VARCHAR)')}, doc_id
          ) AS cap_rank
   FROM documents
 )
@@ -809,13 +810,13 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_CDC_CHUNKS = f"""
 WITH tok AS (
   SELECT doc_id,
-         CAST(generate_subscripts({_SQL_TOKENS}, 1) - 1 AS BIGINT) AS pos,
-         unnest({_SQL_TOKENS}) AS token
+         CAST(generate_subscripts({SQL_TOKENS}, 1) - 1 AS BIGINT) AS pos,
+         unnest({SQL_TOKENS}) AS token
   FROM documents
 ),
 flagged AS (
   SELECT doc_id, pos, token,
-         CASE WHEN ({sql_h60('cdc:', 'token')}) % {1 << _CDC_BITS} = 0
+         CASE WHEN ({render('h60', 'duckdb', 'cdc:', 'token')}) % {1 << _CDC_BITS} = 0
               THEN 1 ELSE 0 END AS flag
   FROM tok
 ),
@@ -880,13 +881,13 @@ def dedup_cdc_doc_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_CDC_DOC_COVERAGE = f"""
 WITH tok AS (
   SELECT doc_id,
-         CAST(generate_subscripts({_SQL_TOKENS}, 1) - 1 AS BIGINT) AS pos,
-         unnest({_SQL_TOKENS}) AS token
+         CAST(generate_subscripts({SQL_TOKENS}, 1) - 1 AS BIGINT) AS pos,
+         unnest({SQL_TOKENS}) AS token
   FROM documents
 ),
 flagged AS (
   SELECT doc_id, pos, token,
-         CASE WHEN ({sql_h60('cdc:', 'token')}) % {1 << _CDC_BITS} = 0
+         CASE WHEN ({render('h60', 'duckdb', 'cdc:', 'token')}) % {1 << _CDC_BITS} = 0
               THEN 1 ELSE 0 END AS flag
   FROM tok
 ),
@@ -1017,7 +1018,7 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(F.broadcast(mid))
         .select(
             (F.col("doc_id") <= F.col("mid")).alias("first_half"),
-            F.explode(X.tokens(F.col("text"))).alias("token"),
+            F.explode(X.tokens("text")).alias("token"),
         )
     )
     # vocabulary-sized reduce persisted: it feeds both its own totals
@@ -1056,7 +1057,7 @@ QUERIES["corpus_drift_report"] = QuerySpec(
     WITH mid AS (SELECT quantile_disc(doc_id, 0.5) AS mid FROM documents),
     tok AS (
       SELECT (doc_id <= mid) AS first_half,
-             unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
+             unnest({SQL_TOKENS}) AS token
       FROM documents CROSS JOIN mid
     ),
     counts AS (
@@ -1101,7 +1102,7 @@ def corpus_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce is per source key — fully partitioned beyond the 1-row
     corpus totals."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("source", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = docs.select("source", F.explode(X.tokens("text")).alias("token"))
     st_counts = tok.groupBy("source", "token").agg(F.count("*").alias("c_s"))
     tot_counts = tok.groupBy("token").agg(F.count("*").alias("c_all"))
     vocab = tot_counts.agg(F.count("*").alias("v"), F.sum("c_all").alias("n_all"))
@@ -1132,7 +1133,7 @@ QUERIES["corpus_drift_by_source"] = QuerySpec(
     corpus_drift_by_source,
     f"""
     WITH tok AS (
-      SELECT source, unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
+      SELECT source, unnest({SQL_TOKENS}) AS token
       FROM documents
     ),
     st_counts AS (
@@ -1199,7 +1200,7 @@ def dedup_passage_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.coalesce(X.tokens(F.col("text")), F.array().cast("array<string>")).alias("l"),
+        F.coalesce(X.tokens("text"), F.array().cast("array<string>")).alias("l"),
     )
     hashed = toks.select(
         "doc_id", token_hash_structs("l").alias("hl")
@@ -1257,11 +1258,11 @@ QUERIES["dedup_passage_removal"] = QuerySpec(
     f"""
     WITH d AS (
       SELECT doc_id,
-             COALESCE({_SQL_TOKENS}, []::VARCHAR[]) AS l
+             COALESCE({SQL_TOKENS}, []::VARCHAR[]) AS l
       FROM documents
     ),
-    h AS (SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM d),
-    g AS (SELECT doc_id, {sql_gram_hash_array('hl', _PASSAGE_W)} AS ga FROM h),
+    h AS (SELECT doc_id, {render('token_hashes', 'duckdb', 'l')} AS hl FROM d),
+    g AS (SELECT doc_id, {render('gram_hashes', 'duckdb', 'hl', _PASSAGE_W)} AS ga FROM h),
     spans AS (
       SELECT doc_id, CAST(generate_subscripts(ga, 1) AS INT) AS pos,
              unnest(ga) AS gh
@@ -1338,7 +1339,7 @@ def training_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the join, and unpersisted each consumer re-scans + re-tokenizes
     # the whole corpus (duplicate_join_subtrees class); same below for j2
     per_src = persist_once(
-        docs.select("source", X.token_count(F.col("text")).alias("n_tok"))
+        docs.select("source", X.token_count("text").alias("n_tok"))
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("n_tokens"))
     )
@@ -1370,7 +1371,7 @@ QUERIES["training_mixture_temperature"] = QuerySpec(
     f"""
     WITH per_src AS (
       SELECT source, COUNT(*) AS n_docs,
-             SUM(len({_SQL_TOKENS})) AS n_tokens
+             SUM(len({SQL_TOKENS})) AS n_tokens
       FROM documents GROUP BY 1
     ),
     tot AS (SELECT SUM(n_tokens) AS total_tokens FROM per_src),

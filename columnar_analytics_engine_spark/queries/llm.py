@@ -20,23 +20,25 @@ from pyspark.sql import functions as F
 from columnar_analytics_engine_spark.functions.hashing import (
     gram_hash_array,
     h60,
-    sql_affine_hash,
-    sql_gram_hash_array,
-    sql_h60,
-    sql_token_hash_structs,
     token_hash_structs,
 )
 from columnar_analytics_engine_spark.functions import text as X
+from columnar_analytics_engine_spark.functions.kernels import render
 from columnar_analytics_engine_spark.operators import dedup as D
 from columnar_analytics_engine_spark.operators import similarity as S
-from columnar_analytics_engine_spark.queries._util import QuerySpec, t
+from columnar_analytics_engine_spark.queries._util import (
+    SQL_FINGERPRINT,
+    SQL_NON_WS_CHARS,
+    SQL_TOKENS,
+    QuerySpec,
+    t,
+)
 
 # shared oracle fragments -----------------------------------------------------
 
-_SQL_TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 _SQL_TOK_CTE = f"""
 tok AS (
-  SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+  SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS token
   FROM documents
 )"""
 
@@ -45,8 +47,9 @@ def _minhash_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
     # integer-exact threshold boundary, mirroring jaccard_pairs (see
     # operators/dedup.py: (den+num)*|A∩B| >= num*(|A|+|B|))
     num, den = D._rational_threshold(threshold)
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
+    mins = ",\n         ".join(
+        f"MIN({render('affine_member', 'duckdb', 'token', i)}) AS h{i}" for i in range(k)
+    )
     band_selects = "\n      UNION ALL\n      ".join(
         "SELECT doc_id, {j} AS band_id, md5(CONCAT_WS(',', {cols})) AS band_key FROM sig".format(
             j=j,
@@ -71,7 +74,7 @@ def _minhash_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
        AND a.doc_id < b.doc_id
     ),
     sets AS (
-      SELECT doc_id, list_distinct({_SQL_TOKENS}) AS toks FROM documents
+      SELECT doc_id, list_distinct({SQL_TOKENS}) AS toks FROM documents
     )
     SELECT c.d1, c.d2,
            CAST(len(list_intersect(sa.toks, sb.toks)) AS DOUBLE)
@@ -86,7 +89,7 @@ def _minhash_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
 
 
 def _simhash_pairs_sql(max_hamming: int, bits: int, band_bits: int) -> str:
-    h = sql_h60("s:", "token")
+    h = render("h60", "duckdb", "s:", "token")
     bit_sums = ",\n         ".join(
         f"SUM(CASE WHEN (({h}) >> {b}) & 1 = 1 THEN cnt ELSE -cnt END) AS b{b}"
         for b in range(bits)
@@ -103,7 +106,7 @@ def _simhash_pairs_sql(max_hamming: int, bits: int, band_bits: int) -> str:
     )
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
     ),
     tokcnt AS (SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
     bitsums AS (
@@ -309,8 +312,9 @@ def _minhash_probe_sql(threshold: float, k: int, bands: int, rows: int, mod: int
     halves' signatures recomputed, candidates restricted to
     (batch, history) pairs."""
     num, den = D._rational_threshold(threshold)
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
+    mins = ",\n         ".join(
+        f"MIN({render('affine_member', 'duckdb', 'token', i)}) AS h{i}" for i in range(k)
+    )
     band_selects = "\n      UNION ALL\n      ".join(
         "SELECT doc_id, {j} AS band_id, md5(CONCAT_WS(',', {cols})) AS band_key FROM sig".format(
             j=j,
@@ -335,7 +339,7 @@ def _minhash_probe_sql(threshold: float, k: int, bands: int, rows: int, mod: int
       WHERE n.doc_id % {mod} = 0 AND h.doc_id % {mod} != 0
     ),
     sets AS (
-      SELECT doc_id, list_distinct({_SQL_TOKENS}) AS toks FROM documents
+      SELECT doc_id, list_distinct({SQL_TOKENS}) AS toks FROM documents
     )
     SELECT c.new_id, c.hist_id,
            CAST(len(list_intersect(sa.toks, sb.toks)) AS DOUBLE)
@@ -370,7 +374,7 @@ def text_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences per term (the inputs to TF-IDF weighting)."""
     docs = t(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode(X.tokens(F.col("text"))).alias("token")
+        "doc_id", F.explode(X.tokens("text")).alias("token")
     )
     # corpus size stays IN the plan (1-row agg broadcast-joined in) so
     # building this DataFrame is fully lazy — no job fires until an action
@@ -434,11 +438,7 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster sizes (unlike rng-based TABLESAMPLE).  The standard way to
     carve stable train/eval splits out of a 100 TB corpus."""
     df = t(spark, sf_dir, "lineitem")
-    key = F.concat_ws(
-        ":", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
-    )
-    from columnar_analytics_engine_spark.functions.hashing import h60
-
+    key = "concat_ws(':', CAST(l_orderkey AS STRING), CAST(l_linenumber AS STRING))"
     return df.filter((h60("smp:", key) % 100) < 10).select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -473,10 +473,10 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select(
         "doc_id",
         X.char_count(txt).alias("n_chars"),
-        X.token_count(txt).alias("n_tokens"),
-        X.distinct_token_count(txt).alias("n_distinct_tokens"),
+        X.token_count("text").alias("n_tokens"),
+        X.distinct_token_count("text").alias("n_distinct_tokens"),
         (
-            X.non_ws_char_count(txt).cast("double") / X.token_count(txt).cast("double")
+            X.non_ws_char_count("text").cast("double") / X.token_count("text").cast("double")
         ).alias("avg_token_len"),
     )
 
@@ -484,9 +484,9 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "documents")
     txt = F.col("text")
-    n_tokens = X.token_count(txt)
+    n_tokens = X.token_count("text")
     stop_ratio = X.stopword_hits("text", "en").cast("double") / n_tokens.cast("double")
-    diversity = X.distinct_token_count(txt).cast("double") / n_tokens.cast("double")
+    diversity = X.distinct_token_count("text").cast("double") / n_tokens.cast("double")
     punct_ratio = X.punct_count(txt).cast("double") / X.char_count(txt).cast("double")
     quality = (
         F.when((n_tokens >= 30) & (stop_ratio >= 0.05) & (diversity >= 0.3), "good")
@@ -518,7 +518,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = t(spark, sf_dir, "documents")
     return df.select(
         "doc_id",
-        X.fingerprint(F.col("text")).alias("fingerprint"),
+        X.fingerprint("text").alias("fingerprint"),
         F.sha2(F.col("text"), 256).alias("sha256"),
     )
 
@@ -540,28 +540,6 @@ def multimodal_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ceil(n_bytes.cast("double") / F.lit(1024.0)).cast("long").alias("n_chunks"),
         F.sha2(F.col("text"), 256).alias("digest"),
     )
-
-
-_SQL_LANG_SCORES = {
-    lang: (
-        f"CAST(len(list_filter({_SQL_TOKENS}, tk -> list_contains("
-        + "["
-        + ", ".join(f"'{w}'" for w in X.STOPWORDS[lang])
-        + "], tk))) AS BIGINT)"
-    )
-    for lang in X.LANG_PRIORITY
-}
-
-
-def _langid_case_sql() -> str:
-    langs = list(X.LANG_PRIORITY)
-    cases = []
-    for i, lang in enumerate(langs[:-1]):
-        conds = " AND ".join(
-            f"s_{lang} >= s_{other}" for other in langs[i + 1 :]
-        )
-        cases.append(f"WHEN {conds} THEN '{lang}'")
-    return "CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END"
 
 
 QUERIES: dict[str, QuerySpec] = {
@@ -623,7 +601,7 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         SELECT l_orderkey, l_linenumber, l_quantity
         FROM lineitem
-        WHERE {sql_h60('smp:', "CONCAT(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR))")} % 100 < 10
+        WHERE {render('h60', 'duckdb', 'smp:', "CONCAT(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR))")} % 100 < 10
         """,
         "hash-based deterministic 10% sample",
         ("sampling",),
@@ -641,7 +619,7 @@ QUERIES: dict[str, QuerySpec] = {
           SELECT doc_id,
                  list_distinct(list_transform(range(1, len(l) - 1),
                      i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS sh
-          FROM (SELECT doc_id, {_SQL_TOKENS} AS l FROM documents)
+          FROM (SELECT doc_id, {SQL_TOKENS} AS l FROM documents)
           WHERE len(l) >= 3
         ),
         g AS (SELECT doc_id, unnest(sh) AS g FROM s),
@@ -670,7 +648,7 @@ QUERIES: dict[str, QuerySpec] = {
                COUNT(DISTINCT doc_id) AS doc_freq,
                COUNT(*) AS total_occurrences,
                (SELECT COUNT(*) FROM documents) AS n_docs
-        FROM (SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents) tok
+        FROM (SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents) tok
         GROUP BY token ORDER BY token
         """,
         "vocabulary document-frequency statistics (TF-IDF inputs)",
@@ -782,10 +760,10 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         SELECT doc_id,
                CAST(LENGTH(trim(text)) AS BIGINT) AS n_chars,
-               CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tokens,
-               CAST(len(list_distinct({_SQL_TOKENS})) AS BIGINT) AS n_distinct_tokens,
-               CAST(LENGTH(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE)
-                 / CAST(len({_SQL_TOKENS}) AS DOUBLE) AS avg_token_len
+               CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tokens,
+               CAST(len(list_distinct({SQL_TOKENS})) AS BIGINT) AS n_distinct_tokens,
+               CAST({SQL_NON_WS_CHARS} AS DOUBLE)
+                 / CAST(len({SQL_TOKENS}) AS DOUBLE) AS avg_token_len
         FROM documents
         """,
         "per-document token statistics",
@@ -796,9 +774,9 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         WITH base AS (
           SELECT doc_id,
-                 CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tokens,
-                 {_SQL_LANG_SCORES['en']} AS stop_hits,
-                 CAST(len(list_distinct({_SQL_TOKENS})) AS BIGINT) AS n_distinct,
+                 CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tokens,
+                 {render('stopword_hits', 'duckdb', 'text', 'en')} AS stop_hits,
+                 CAST(len(list_distinct({SQL_TOKENS})) AS BIGINT) AS n_distinct,
                  CAST(LENGTH(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS BIGINT) AS n_punct,
                  CAST(LENGTH(trim(text)) AS BIGINT) AS n_chars
           FROM documents
@@ -823,11 +801,11 @@ QUERIES: dict[str, QuerySpec] = {
         f"""
         WITH scores AS (
           SELECT doc_id, lang AS labeled_lang,
-                 {', '.join(f"{_SQL_LANG_SCORES[lang]} AS s_{lang}" for lang in X.LANG_PRIORITY)}
+                 {', '.join(render('stopword_hits', 'duckdb', 'text', lang) + f' AS s_{lang}' for lang in X.LANG_PRIORITY)}
           FROM documents
         )
         SELECT doc_id, labeled_lang,
-               {_langid_case_sql()} AS pred_lang,
+               {render('langid', 'duckdb', {lang: f's_{lang}' for lang in X.LANG_PRIORITY})} AS pred_lang,
                {', '.join(f's_{lang} AS score_{lang}' for lang in X.LANG_PRIORITY)}
         FROM scores
         """,
@@ -836,9 +814,9 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "text_fingerprint": QuerySpec(
         text_fingerprint,
-        """
+        f"""
         SELECT doc_id,
-               md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
+               {SQL_FINGERPRINT} AS fingerprint,
                sha256(text) AS sha256
         FROM documents
         """,
@@ -882,7 +860,7 @@ def dedup_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact dedup — between md5-exact and near-dup in strictness)."""
     docs = t(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", X.fingerprint(F.col("text")).alias("fp"))
+        docs.select("doc_id", X.fingerprint("text").alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_members"))
     )
@@ -892,7 +870,7 @@ def text_top_tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 most frequent tokens per labeled language (explode +
     two-level aggregation + per-group top-k window)."""
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("lang", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = docs.select("lang", F.explode(X.tokens("text")).alias("token"))
     counts = tok.groupBy("lang", "token").agg(F.count("*").alias("n"))
     w = W.partitionBy("lang").orderBy(F.col("n").desc(), F.col("token"))
     return (
@@ -904,8 +882,8 @@ def text_top_tokens_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["dedup_fingerprint_groups"] = QuerySpec(
     dedup_fingerprint_groups,
-    """
-    SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+    f"""
+    SELECT {SQL_FINGERPRINT} AS fp,
            MIN(doc_id) AS keeper_id,
            COUNT(*) AS n_members
     FROM documents GROUP BY 1
@@ -921,7 +899,7 @@ QUERIES["text_top_tokens_per_lang"] = QuerySpec(
       SELECT lang, token, COUNT(*) AS n,
              CAST(ROW_NUMBER() OVER (PARTITION BY lang
                   ORDER BY COUNT(*) DESC, token) AS BIGINT) AS rnk
-      FROM (SELECT lang, unnest({_SQL_TOKENS}) AS token FROM documents) tk
+      FROM (SELECT lang, unnest({SQL_TOKENS}) AS token FROM documents) tk
       GROUP BY lang, token) ranked
     WHERE rnk <= 5
     """,
@@ -1085,7 +1063,7 @@ QUERIES["dedup_containment"] = QuerySpec(
       SELECT doc_id,
              list_distinct(list_transform(range(1, len(l) - 1),
                  i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS sh
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS l FROM documents)
+      FROM (SELECT doc_id, {SQL_TOKENS} AS l FROM documents)
       WHERE len(l) >= 3
     ),
     tok AS (SELECT doc_id, unnest(sh) AS token FROM s),
@@ -1190,8 +1168,9 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _containment_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str:
     num, den = D._rational_threshold(threshold)
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
+    mins = ",\n         ".join(
+        f"MIN({render('affine_member', 'duckdb', 'token', i)}) AS h{i}" for i in range(k)
+    )
     band_selects = "\n      UNION ALL\n      ".join(
         "SELECT doc_id, {j} AS band_id, md5(CONCAT_WS(',', {cols})) AS band_key FROM sig".format(
             j=j,
@@ -1219,7 +1198,7 @@ def _containment_lsh_sql(threshold: float, k: int, bands: int, rows: int) -> str
       SELECT doc_id,
              list_distinct(list_transform(range(1, len(l) - 1),
                  i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2])) AS sh
-      FROM (SELECT doc_id, {_SQL_TOKENS} AS l FROM documents)
+      FROM (SELECT doc_id, {SQL_TOKENS} AS l FROM documents)
       WHERE len(l) >= 3
     ),
     joined AS (
@@ -1377,11 +1356,11 @@ def _pagerank_sql() -> str:
     )
     return f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-      WHERE len({_SQL_TOKENS}) >= {_PR_W}
+      SELECT doc_id, {SQL_TOKENS} AS l FROM documents
+      WHERE len({SQL_TOKENS}) >= {_PR_W}
     ),
-    h AS (SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM d),
-    g AS (SELECT doc_id, {sql_gram_hash_array('hl', _PR_W)} AS ga FROM h),
+    h AS (SELECT doc_id, {render('token_hashes', 'duckdb', 'l')} AS hl FROM d),
+    g AS (SELECT doc_id, {render('gram_hashes', 'duckdb', 'hl', _PR_W)} AS ga FROM h),
     spans AS (SELECT DISTINCT doc_id, unnest(ga) AS gh FROM g),
     ok AS (
       SELECT gh FROM spans GROUP BY 1
@@ -1443,7 +1422,7 @@ def training_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_training.py.
     """
     clusters = dedup_clusters(spark, sf_dir)
-    gate = h60("split:", F.col("cluster_id").cast("string")) % 100
+    gate = h60("split:", "CAST(cluster_id AS STRING)") % 100
     return clusters.select(
         "doc_id",
         "cluster_id",
@@ -1477,7 +1456,7 @@ QUERIES["training_leakage_safe_split"] = QuerySpec(
                 WHEN gate < 95 THEN 'validation'
                 ELSE 'test' END AS split
     FROM (SELECT doc_id, cluster_id,
-                 {sql_h60('split:', 'CAST(cluster_id AS VARCHAR)')} % 100 AS gate
+                 {render('h60', 'duckdb', 'split:', 'CAST(cluster_id AS VARCHAR)')} % 100 AS gate
           FROM assigned) g
     """.format(lsh=_minhash_lsh_sql(0.8, D.MINHASH_K, D.LSH_BANDS, D.LSH_ROWS_PER_BAND)),
     "cluster-aware train/val/test split (near-dups never straddle splits)",
@@ -1495,7 +1474,7 @@ def _passage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the frequent-shingle carrier guard), plan-keyed-persisted so
     consumers that branch the edge list scan it once."""
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", X.tokens(F.col("text")).alias("l")).filter(
+    toks = docs.select("doc_id", X.tokens("text").alias("l")).filter(
         F.size("l") >= _PR_W
     )
     hashed = toks.select("doc_id", token_hash_structs("l").alias("hl"))
@@ -1571,11 +1550,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _triangle_sql() -> str:
     return f"""
     WITH d AS (
-      SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-      WHERE len({_SQL_TOKENS}) >= {_PR_W}
+      SELECT doc_id, {SQL_TOKENS} AS l FROM documents
+      WHERE len({SQL_TOKENS}) >= {_PR_W}
     ),
-    h AS (SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM d),
-    g AS (SELECT doc_id, {sql_gram_hash_array('hl', _PR_W)} AS ga FROM h),
+    h AS (SELECT doc_id, {render('token_hashes', 'duckdb', 'l')} AS hl FROM d),
+    g AS (SELECT doc_id, {render('gram_hashes', 'duckdb', 'hl', _PR_W)} AS ga FROM h),
     spans AS (SELECT DISTINCT doc_id, unnest(ga) AS gh FROM g),
     ok AS (
       SELECT gh FROM spans GROUP BY 1
@@ -1665,11 +1644,11 @@ QUERIES["text_language_id_accuracy"] = QuerySpec(
     f"""
     WITH scores AS (
       SELECT doc_id, lang AS labeled_lang,
-             {', '.join(f"{_SQL_LANG_SCORES[lang]} AS s_{lang}" for lang in X.LANG_PRIORITY)}
+             {', '.join(render('stopword_hits', 'duckdb', 'text', lang) + f' AS s_{lang}' for lang in X.LANG_PRIORITY)}
       FROM documents
     ),
     pred AS (
-      SELECT labeled_lang, {_langid_case_sql()} AS pred_lang FROM scores
+      SELECT labeled_lang, {render('langid', 'duckdb', {lang: f's_{lang}' for lang in X.LANG_PRIORITY})} AS pred_lang FROM scores
     ),
     cells AS (
       SELECT labeled_lang, pred_lang, COUNT(*) AS n
@@ -1712,7 +1691,7 @@ def corpus_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations keyed by source, one join — all map-combinable; exact
     integers with one final division per ratio."""
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("source", X.tokens(F.col("text")).alias("l"))
+    toks = docs.select("source", X.tokens("text").alias("l"))
     uni = toks.select("source", F.explode("l").alias("w"))
     uni_stats = uni.groupBy("source").agg(
         F.count("*").alias("n_tokens"),
@@ -1755,7 +1734,7 @@ def corpus_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["corpus_ngram_diversity"] = QuerySpec(
     corpus_ngram_diversity,
     f"""
-    WITH tk AS (SELECT source, {_SQL_TOKENS} AS l FROM documents),
+    WITH tk AS (SELECT source, {SQL_TOKENS} AS l FROM documents),
     uni AS (
       SELECT source,
              CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -2096,13 +2075,14 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_calibration_sql() -> str:
     k = D.MINHASH_K
-    fam = sql_affine_hash("token", k)
-    mins = ",\n         ".join(f"MIN({fam[i]}) AS h{i}" for i in range(k))
+    mins = ",\n         ".join(
+        f"MIN({render('affine_member', 'duckdb', 'token', i)}) AS h{i}" for i in range(k)
+    )
     agree = " + ".join(f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(k))
     return f"""
     WITH pr AS ({_minhash_lsh_sql(0.8, D.MINHASH_K, D.LSH_BANDS, D.LSH_ROWS_PER_BAND)}),
     tok2 AS (
-      SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+      SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS token
       FROM documents
     ),
     sig2 AS (

@@ -19,14 +19,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from columnar_analytics_engine_spark.functions import text as X
+from columnar_analytics_engine_spark.functions.kernels import render
 from columnar_analytics_engine_spark.operators import dedup as D
-from columnar_analytics_engine_spark.queries._util import QuerySpec, t
-from columnar_analytics_engine_spark.queries.llm import (
-    _SQL_LANG_SCORES,
-    _SQL_TOKENS,
-    _langid_case_sql,
-    _minhash_lsh_sql,
+from columnar_analytics_engine_spark.queries._util import (
+    SQL_FINGERPRINT,
+    SQL_TOKENS,
+    QuerySpec,
+    t,
 )
+from columnar_analytics_engine_spark.queries.llm import _minhash_lsh_sql
 
 
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,7 +43,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     that survives all gates.
     """
     docs = t(spark, sf_dir, "documents")
-    txt = F.col("text")
 
     # 1. exact dedup by canonical fingerprint.  The survivor frame
     # feeds BOTH the near-dup signature build and the anti-join's left
@@ -53,7 +53,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w_fp = W.partitionBy("fp").orderBy("doc_id")
     s1 = persist_once(
-        docs.withColumn("fp", X.fingerprint(txt))
+        docs.withColumn("fp", X.fingerprint("text"))
         .withColumn("_rn", F.row_number().over(w_fp))
         .filter(F.col("_rn") == 1)
         .drop("fp", "_rn")
@@ -70,9 +70,9 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 3 + 4. quality gate and language tag
-    n_tokens = X.token_count(txt)
+    n_tokens = X.token_count("text")
     stop_ratio = X.stopword_hits("text", "en").cast("double") / n_tokens.cast("double")
-    diversity = X.distinct_token_count(txt).cast("double") / n_tokens.cast("double")
+    diversity = X.distinct_token_count("text").cast("double") / n_tokens.cast("double")
     quality = (
         F.when((n_tokens >= 30) & (stop_ratio >= 0.05) & (diversity >= 0.3), "good")
         .when(n_tokens >= 10, "fair")
@@ -101,7 +101,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnar_analytics_engine_spark.functions.caching import persist_once as _persist_once
 
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = docs.select("doc_id", F.explode(X.tokens("text")).alias("token"))
     # one explode, memoized: df is derived from the tf table (rows are
     # distinct (doc, token), so count(*) == countDistinct(doc_id)) —
     # left lazy the explode would run once per consumer
@@ -172,7 +172,6 @@ def corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-count argmax with an alphabetical tie-break (deterministic).
     """
     docs = t(spark, sf_dir, "documents")
-    txt = F.col("text")
     per_src_lang = (
         docs.groupBy("source", "lang").agg(F.count("*").alias("n"))
     )
@@ -184,8 +183,8 @@ def corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.countDistinct(X.fingerprint(txt)).alias("n_unique"),
-        F.sum(X.token_count(txt)).alias("total_tokens"),
+        F.countDistinct(X.fingerprint("text")).alias("n_unique"),
+        F.sum(X.token_count("text")).alias("total_tokens"),
         F.sum(F.col("n_chars").cast("long")).alias("total_chars"),
     )
     dup_rate = (
@@ -215,7 +214,7 @@ QUERIES: dict[str, QuerySpec] = {
           SELECT * FROM (
             SELECT d.*,
                    ROW_NUMBER() OVER (
-                     PARTITION BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+                     PARTITION BY {SQL_FINGERPRINT}
                      ORDER BY doc_id) AS _rn
             FROM documents d) x
           WHERE _rn = 1
@@ -228,14 +227,14 @@ QUERIES: dict[str, QuerySpec] = {
         ),
         feats AS (
           SELECT doc_id,
-                 CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tokens,
-                 {_SQL_LANG_SCORES['en']} AS stop_hits,
-                 CAST(len(list_distinct({_SQL_TOKENS})) AS BIGINT) AS n_distinct,
-                 {', '.join(f"{_SQL_LANG_SCORES[lang]} AS s_{lang}" for lang in X.LANG_PRIORITY)}
+                 CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tokens,
+                 {render('stopword_hits', 'duckdb', 'text', 'en')} AS stop_hits,
+                 CAST(len(list_distinct({SQL_TOKENS})) AS BIGINT) AS n_distinct,
+                 {', '.join(render('stopword_hits', 'duckdb', 'text', lang) + f' AS s_{lang}' for lang in X.LANG_PRIORITY)}
           FROM s2
         )
         SELECT doc_id,
-               {_langid_case_sql()} AS pred_lang,
+               {render('langid', 'duckdb', {lang: f's_{lang}' for lang in X.LANG_PRIORITY})} AS pred_lang,
                CASE WHEN n_tokens >= 30
                          AND CAST(stop_hits AS DOUBLE) / CAST(n_tokens AS DOUBLE) >= 0.05
                          AND CAST(n_distinct AS DOUBLE) / CAST(n_tokens AS DOUBLE) >= 0.3
@@ -253,7 +252,7 @@ QUERIES: dict[str, QuerySpec] = {
         text_tfidf_top_terms,
         f"""
         WITH tok AS (
-          SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+          SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
         ),
         tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
         idf AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
@@ -309,8 +308,8 @@ QUERIES: dict[str, QuerySpec] = {
         st AS (
           SELECT source,
                  COUNT(*) AS n_docs,
-                 COUNT(DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))) AS n_unique,
-                 CAST(SUM(len({_SQL_TOKENS})) AS BIGINT) AS total_tokens,
+                 COUNT(DISTINCT {SQL_FINGERPRINT}) AS n_unique,
+                 CAST(SUM(len({SQL_TOKENS})) AS BIGINT) AS total_tokens,
                  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars
           FROM documents GROUP BY 1
         )

@@ -32,13 +32,13 @@ from pyspark.sql import Window as W
 
 from columnar_analytics_engine_spark.functions import text as X
 from columnar_analytics_engine_spark.queries._util import (
+    SQL_TOKENS,
     QuerySpec,
     exact_sum,
     sql_exact_sum,
     t,
 )
 
-_SQL_TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 
 # Fixed benchmark query for the BM25 entry (literal terms so the scoring
 # pivot has a static column set; a parameterized search passes its own).
@@ -49,7 +49,7 @@ BM25_B = 0.75
 
 def _tok(docs: DataFrame) -> DataFrame:
     return docs.select(
-        "doc_id", F.explode(X.tokens(F.col("text"))).alias("token")
+        "doc_id", F.explode(X.tokens("text")).alias("token")
     )
 
 
@@ -67,7 +67,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     per_doc = docs.select(
-        "doc_id", F.explode(X.distinct_tokens(F.col("text"))).alias("token")
+        "doc_id", F.explode(X.distinct_tokens("text")).alias("token")
     )
     return (
         per_doc.groupBy("token")
@@ -113,11 +113,11 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df_ = tf.groupBy("token").agg(F.count("*").cast("double").alias("df"))
     dl = docs.select(
-        "doc_id", X.token_count(F.col("text")).cast("double").alias("dl")
+        "doc_id", X.token_count("text").cast("double").alias("dl")
     )
     stats = docs.agg(
         F.count("*").cast("double").alias("n_docs"),
-        F.sum(X.token_count(F.col("text"))).cast("double").alias("total_tokens"),
+        F.sum(X.token_count("text")).cast("double").alias("total_tokens"),
     )
 
     idf = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
@@ -399,7 +399,7 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row_id",
         "exact_n",
         F.pmod(
-            h60("cms", F.concat(F.col("row_id").cast("string"), F.lit(":"), F.col("u"))),
+            h60("cms", "CONCAT(CAST(row_id AS STRING), ':', u)"),
             F.lit(_CMS_WIDTH),
         ).alias("bucket"),
     )
@@ -414,14 +414,7 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_n",
         "row_id",
         F.pmod(
-            h60(
-                "cms",
-                F.concat(
-                    F.col("row_id").cast("string"),
-                    F.lit(":"),
-                    F.col("user_id").cast("string"),
-                ),
-            ),
+            h60("cms", "CONCAT(CAST(row_id AS STRING), ':', CAST(user_id AS STRING))"),
             F.lit(_CMS_WIDTH),
         ).alias("bucket"),
     )
@@ -471,7 +464,7 @@ QUERIES: dict[str, QuerySpec] = {
         text_inverted_index,
         f"""
         WITH tok AS (
-          SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+          SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS token
           FROM documents
         )
         SELECT token,
@@ -486,7 +479,7 @@ QUERIES: dict[str, QuerySpec] = {
         retrieval_bm25_topk,
         f"""
         WITH tok AS (
-          SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+          SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
         ),
         hits AS (SELECT * FROM tok WHERE token IN ({_SQL_BM25_HITS})),
         tf AS (
@@ -498,11 +491,11 @@ QUERIES: dict[str, QuerySpec] = {
           FROM hits GROUP BY 1
         ),
         dl AS (
-          SELECT doc_id, CAST(len({_SQL_TOKENS}) AS DOUBLE) AS dl FROM documents
+          SELECT doc_id, CAST(len({SQL_TOKENS}) AS DOUBLE) AS dl FROM documents
         ),
         stats AS (
           SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-                 CAST(SUM(len({_SQL_TOKENS})) AS DOUBLE) AS total_tokens
+                 CAST(SUM(len({SQL_TOKENS})) AS DOUBLE) AS total_tokens
           FROM documents
         ),
         scored AS (
@@ -533,7 +526,7 @@ QUERIES: dict[str, QuerySpec] = {
         text_unigram_lm_quality,
         f"""
         WITH tok AS (
-          SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+          SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
         ),
         counts AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS c FROM tok GROUP BY 1),
         stats AS (
@@ -776,7 +769,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_HYBRID_RRF = f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
 ),
 hits AS (SELECT * FROM tok WHERE token IN ({_SQL_BM25_HITS})),
 tf AS (
@@ -788,11 +781,11 @@ df AS (
   FROM hits GROUP BY 1
 ),
 dl AS (
-  SELECT doc_id, CAST(len({_SQL_TOKENS}) AS DOUBLE) AS dl FROM documents
+  SELECT doc_id, CAST(len({SQL_TOKENS}) AS DOUBLE) AS dl FROM documents
 ),
 stats AS (
   SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-         CAST(SUM(len({_SQL_TOKENS})) AS DOUBLE) AS total_tokens
+         CAST(SUM(len({SQL_TOKENS})) AS DOUBLE) AS total_tokens
   FROM documents
 ),
 scored AS (
@@ -963,7 +956,7 @@ def retrieval_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.posexplode(X.tokens(F.col("text"))).alias("pos", "token")
+        "doc_id", F.posexplode(X.tokens("text")).alias("pos", "token")
     ).filter(F.col("token").isin(*_PHRASE))
     a = tok.filter(F.col("token") == _PHRASE[0]).select(
         "doc_id", F.col("pos").alias("pa")
@@ -985,8 +978,8 @@ QUERIES["retrieval_phrase_search"] = QuerySpec(
     f"""
     WITH tok AS (
       SELECT doc_id,
-             CAST(generate_subscripts({_SQL_TOKENS}, 1) - 1 AS INT) AS pos,
-             unnest({_SQL_TOKENS}) AS token
+             CAST(generate_subscripts({SQL_TOKENS}, 1) - 1 AS INT) AS pos,
+             unnest({SQL_TOKENS}) AS token
       FROM documents
     ),
     a AS (SELECT doc_id, pos AS pa FROM tok WHERE token = '{_PHRASE[0]}'),
@@ -1024,7 +1017,7 @@ def text_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles; corpus totals are a broadcast 1-row aggregate.
     """
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", X.tokens(F.col("text")).alias("l")).filter(
+    toks = docs.select("doc_id", X.tokens("text").alias("l")).filter(
         F.size("l") >= 2
     )
     from columnar_analytics_engine_spark.functions.caching import persist_once as _persist_once
@@ -1053,7 +1046,7 @@ def text_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cb").alias("cctx")
     )
     uni = _persist_once(
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("u"))
+        docs.select(F.explode(X.tokens("text")).alias("u"))
         .groupBy("u")
         .agg(F.count("*").alias("cu"))
     )
@@ -1087,8 +1080,8 @@ QUERIES["text_bigram_lm_quality"] = QuerySpec(
     text_bigram_lm_quality,
     f"""
     WITH toks AS (
-      SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-      WHERE len({_SQL_TOKENS}) >= 2
+      SELECT doc_id, {SQL_TOKENS} AS l FROM documents
+      WHERE len({SQL_TOKENS}) >= 2
     ),
     pairs AS (
       SELECT doc_id, l[i] AS w1, l[i + 1] AS w2
@@ -1098,7 +1091,7 @@ QUERIES["text_bigram_lm_quality"] = QuerySpec(
     ctx AS (SELECT b1 AS cw, SUM(cb) AS cctx FROM bg GROUP BY 1),
     uni AS (
       SELECT token AS u, COUNT(*) AS cu FROM (
-        SELECT unnest({_SQL_TOKENS}) AS token FROM documents) y
+        SELECT unnest({SQL_TOKENS}) AS token FROM documents) y
       GROUP BY 1
     ),
     stats AS (SELECT SUM(cu) AS t_tokens, COUNT(*) AS v_size FROM uni),
@@ -1146,7 +1139,7 @@ def retrieval_tfidf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnar_analytics_engine_spark.functions.caching import persist_once as _persist_once
 
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = docs.select("doc_id", F.explode(X.tokens("text")).alias("token"))
     tf = _persist_once(tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
     df_ = tf.groupBy("token").agg(F.count("*").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
@@ -1202,7 +1195,7 @@ QUERIES["retrieval_tfidf_cosine_topk"] = QuerySpec(
     retrieval_tfidf_cosine_topk,
     f"""
     WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKENS}) AS token FROM documents
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token FROM documents
     ),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
     dfx AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),

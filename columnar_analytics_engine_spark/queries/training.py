@@ -36,15 +36,17 @@ from columnar_analytics_engine_spark.functions.caching import persist_once as _p
 from columnar_analytics_engine_spark.functions.hashing import (
     gram_hash_array,
     h60,
-    sql_gram_hash_array,
-    sql_h60,
-    sql_token_hash_structs,
     token_hash_structs,
 )
+from columnar_analytics_engine_spark.functions.kernels import render
 from columnar_analytics_engine_spark.functions.similarity import cosine, with_norms
-from columnar_analytics_engine_spark.queries._util import QuerySpec, t
+from columnar_analytics_engine_spark.queries._util import (
+    SQL_NON_WS_CHARS,
+    SQL_TOKENS,
+    QuerySpec,
+    t,
+)
 
-_SQL_TOKENS = "regexp_split_to_array(trim(text), '\\s+')"
 
 # ---------------------------------------------------------------------------
 # quality: repetition filters (Gopher-style)
@@ -78,7 +80,7 @@ def quality_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluate) the regex split per element_at call — measured 19×
     # slower at sf0.1.  A named column is computed once per row.
     toks = docs.select(
-        "doc_id", F.col("text"), X.tokens(F.col("text")).alias("l")
+        "doc_id", F.col("text"), X.tokens("text").alias("l")
     )
     l = F.col("l")
     n = F.size(l).cast("long")
@@ -97,7 +99,7 @@ def quality_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_token_frac = F.lit(1.0) - n_distinct.cast("double") / n.cast("double")
     top_token_frac = top_cnt.cast("double") / n.cast("double")
     dup_bigram_frac = F.lit(1.0) - n_bg_distinct.cast("double") / n_bg.cast("double")
-    mean_token_len = X.non_ws_char_count(F.col("text")).cast("double") / n.cast("double")
+    mean_token_len = X.non_ws_char_count("text").cast("double") / n.cast("double")
     keep = (
         (n >= 20)
         & (top_token_frac <= F.lit(0.12))
@@ -117,7 +119,7 @@ def quality_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_QUALITY_REPETITION = f"""
 WITH f AS (
-  SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
+  SELECT doc_id, {SQL_TOKENS} AS l FROM documents
 ),
 m AS (
   SELECT doc_id,
@@ -128,7 +130,7 @@ m AS (
          CAST(len(l) - 1 AS BIGINT) AS nbg,
          CAST(len(list_distinct(list_transform(range(1, len(l)),
               i -> l[i] || ' ' || l[i+1]))) AS BIGINT) AS ndbg,
-         CAST(LENGTH(regexp_replace(trim(text), '\\s+', '', 'g')) AS BIGINT) AS nchars
+         CAST({SQL_NON_WS_CHARS} AS BIGINT) AS nchars
   FROM f JOIN documents USING (doc_id)
   WHERE len(l) >= 2
 )
@@ -169,7 +171,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     # token array materialized once (see quality_repetition_filters)
-    toks = docs.select("doc_id", X.tokens(F.col("text")).alias("l")).filter(
+    toks = docs.select("doc_id", X.tokens("text").alias("l")).filter(
         F.size("l") >= _CONTAM_N
     )
     hashed = toks.select("doc_id", token_hash_structs("l").alias("hl"))
@@ -201,15 +203,15 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CONTAMINATION = f"""
 WITH f AS (
-  SELECT doc_id, {_SQL_TOKENS} AS l FROM documents
-  WHERE len({_SQL_TOKENS}) >= {_CONTAM_N}
+  SELECT doc_id, {SQL_TOKENS} AS l FROM documents
+  WHERE len({SQL_TOKENS}) >= {_CONTAM_N}
 ),
 h AS (
-  SELECT doc_id, {sql_token_hash_structs('l')} AS hl FROM f
+  SELECT doc_id, {render('token_hashes', 'duckdb', 'l')} AS hl FROM f
 ),
 sh AS (
   SELECT doc_id,
-         unnest(list_distinct({sql_gram_hash_array('hl', _CONTAM_N)})) AS gh
+         unnest(list_distinct({render('gram_hashes', 'duckdb', 'hl', _CONTAM_N)})) AS gh
   FROM h
 ),
 bench AS (SELECT DISTINCT gh FROM sh WHERE doc_id % {_CONTAM_BENCH_MOD} = 0),
@@ -242,11 +244,11 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs and engines, and the report shows the hash balances them.
     One groupBy; at scale this is the pre-write repartition key."""
     docs = t(spark, sf_dir, "documents")
-    shard = (h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS).alias("shard")
+    shard = (h60("shard:", "CAST(doc_id AS STRING)") % _N_SHARDS).alias("shard")
     return (
         docs.select(
             shard,
-            X.token_count(F.col("text")).alias("n_tok"),
+            X.token_count("text").alias("n_tok"),
             F.col("n_chars").cast("long").alias("nc"),
             "doc_id",
         )
@@ -263,9 +265,9 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_SHARD = f"""
-SELECT {sql_h60('shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
+SELECT {render('h60', 'duckdb', 'shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
        COUNT(*) AS n_docs,
-       CAST(SUM(len({_SQL_TOKENS})) AS BIGINT) AS total_tokens,
+       CAST(SUM(len({SQL_TOKENS})) AS BIGINT) AS total_tokens,
        CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
        MIN(doc_id) AS min_doc_id,
        MAX(doc_id) AS max_doc_id
@@ -286,8 +288,8 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     two), a single exact IEEE op.
     """
     docs = t(spark, sf_dir, "documents")
-    shard = (h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS).alias("shard")
-    base = docs.select(shard, "doc_id", X.token_count(F.col("text")).alias("n_tok"))
+    shard = (h60("shard:", "CAST(doc_id AS STRING)") % _N_SHARDS).alias("shard")
+    base = docs.select(shard, "doc_id", X.token_count("text").alias("n_tok"))
     w = (
         W.partitionBy("shard")
         .orderBy("doc_id")
@@ -314,9 +316,9 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_PACKING = f"""
 WITH base AS (
-  SELECT {sql_h60('shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
+  SELECT {render('h60', 'duckdb', 'shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
          doc_id,
-         CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tok
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 packed AS (
@@ -353,7 +355,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.create_map(
         *[F.lit(x) for kv in _STRATA_RATES.items() for x in kv]
     )[F.col("lang")]
-    gate = h60("strat:", F.concat(F.col("lang"), F.lit(":"), F.col("doc_id").cast("string"))) % 1000
+    gate = h60("strat:", "CONCAT(lang, ':', CAST(doc_id AS STRING))") % 1000
     return (
         docs.filter(gate < F.coalesce(rate, F.lit(0)))
         .select("doc_id", "lang", "source", gate.alias("gate"))
@@ -362,9 +364,9 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_STRATIFIED = f"""
 SELECT doc_id, lang, source,
-       {sql_h60('strat:', "lang || ':' || CAST(doc_id AS VARCHAR)")} % 1000 AS gate
+       {render('h60', 'duckdb', 'strat:', "lang || ':' || CAST(doc_id AS VARCHAR)")} % 1000 AS gate
 FROM documents
-WHERE {sql_h60('strat:', "lang || ':' || CAST(doc_id AS VARCHAR)")} % 1000
+WHERE {render('h60', 'duckdb', 'strat:', "lang || ':' || CAST(doc_id AS VARCHAR)")} % 1000
       < CASE lang {' '.join(f"WHEN '{k}' THEN {v}" for k, v in _STRATA_RATES.items())} ELSE 0 END
 """
 
@@ -1195,7 +1197,7 @@ def training_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(keep, "doc_id")
         .join(contaminated, "doc_id", "left_anti")
         .withColumn(
-            "shard", h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS
+            "shard", h60("shard:", "CAST(doc_id AS STRING)") % _N_SHARDS
         )
     )
     w = (
@@ -1217,7 +1219,7 @@ def training_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_EXPORT_MANIFEST = f"""
 WITH f AS (
-  SELECT doc_id, lang, {_SQL_TOKENS} AS l, text FROM documents
+  SELECT doc_id, lang, {SQL_TOKENS} AS l, text FROM documents
 ),
 q AS (
   SELECT doc_id, CAST(len(l) AS BIGINT) AS n_tokens
@@ -1229,11 +1231,11 @@ q AS (
     AND 1.0 - CAST(len(list_distinct(list_transform(range(1, len(l)),
           i -> l[i] || ' ' || l[i+1]))) AS DOUBLE)
         / CAST(len(l) - 1 AS DOUBLE) <= 0.05
-    AND CAST(LENGTH(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE)
+    AND CAST({SQL_NON_WS_CHARS} AS DOUBLE)
         / CAST(len(l) AS DOUBLE) >= 3.0
 ),
 sh AS (
-  SELECT doc_id, {sql_h60('ctm:', 'g')} AS gh
+  SELECT doc_id, {render('h60', 'duckdb', 'ctm:', 'g')} AS gh
   FROM (
     SELECT doc_id, unnest(list_distinct(list_transform(
              range(1, len(l) - {_CONTAM_N - 2}),
@@ -1251,7 +1253,7 @@ contaminated AS (
 ),
 survivors AS (
   SELECT d.doc_id, d.lang, q.n_tokens,
-         {sql_h60('shard:', 'CAST(d.doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard
+         {render('h60', 'duckdb', 'shard:', 'CAST(d.doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard
   FROM documents d JOIN q ON d.doc_id = q.doc_id
   WHERE d.doc_id % {_CONTAM_BENCH_MOD} != 0
     AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
@@ -1281,10 +1283,10 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces every double bit-for-bit.
     """
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.col("text"), X.tokens(F.col("text")).alias("l"))
+    toks = docs.select("doc_id", F.col("text"), X.tokens("text").alias("l"))
     l = F.col("l")
     n = F.size(l).cast("long")
-    mean_word_len = X.non_ws_char_count(F.col("text")).cast("double") / n.cast("double")
+    mean_word_len = X.non_ws_char_count("text").cast("double") / n.cast("double")
     n_symbols = (
         F.regexp_count(F.col("text"), F.lit("#"))
         + F.regexp_count(F.col("text"), F.lit(r"\.\.\."))
@@ -1321,12 +1323,12 @@ _SQL_STOP_EN = (
 
 _SQL_GOPHER_RULES = f"""
 WITH f AS (
-  SELECT doc_id, text, {_SQL_TOKENS} AS l FROM documents
+  SELECT doc_id, text, {SQL_TOKENS} AS l FROM documents
 ),
 m AS (
   SELECT doc_id,
          CAST(len(l) AS BIGINT) AS n,
-         CAST(LENGTH(regexp_replace(trim(text), '\\s+', '', 'g')) AS BIGINT) AS nchars,
+         CAST({SQL_NON_WS_CHARS} AS BIGINT) AS nchars,
          CAST(len(regexp_extract_all(text, '#'))
               + len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS nsym,
          CAST(len(list_filter(l, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS nalpha,
@@ -1471,7 +1473,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted sample from a 100 TB corpus in one pass.
     """
     docs = t(spark, sf_dir, "documents")
-    u_int = (h60("wrs:", F.col("doc_id").cast("string")) % 1_000_000) + 1
+    u_int = (h60("wrs:", "CAST(doc_id AS STRING)") % 1_000_000) + 1
     u = u_int.cast("double") / F.lit(1_000_000.0)
     w = F.greatest(F.col("n_chars"), F.lit(1)).cast("double")
     key = F.round((-F.log(u) / w) * F.lit(1e12)).cast("long")
@@ -1483,7 +1485,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_WRS_U = (
-    f"(({sql_h60('wrs:', 'CAST(doc_id AS VARCHAR)')} % 1000000) + 1) / 1000000.0"
+    f"(({render('h60', 'duckdb', 'wrs:', 'CAST(doc_id AS VARCHAR)')} % 1000000) + 1) / 1000000.0"
 )
 
 _SQL_WRS = f"""
@@ -1520,7 +1522,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     both key-bounded.
     """
     docs = t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("token"))
+    tok = docs.select("doc_id", F.explode(X.tokens("text")).alias("token"))
     counts = tok.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
     per_doc = counts.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
@@ -1542,7 +1544,7 @@ QUERIES["text_token_entropy"] = QuerySpec(
     text_token_entropy,
     f"""
     WITH tok AS (
-      SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
+      SELECT doc_id, unnest({SQL_TOKENS}) AS token
       FROM documents
     ),
     counts AS (
@@ -1654,6 +1656,12 @@ QUERIES["contamination_embedding_cosine"] = QuerySpec(
 )
 
 
+def _fp_payload(dialect: str) -> str:
+    """The per-document checksum payload: id and text fingerprint."""
+    fp = render("fingerprint", dialect, "text")
+    return f"CONCAT(CAST(doc_id AS STRING), '|', COALESCE({fp}, ''))"
+
+
 def training_shard_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent content checksum per training shard: each doc
     contributes two independently-salted ``h60`` hashes of its
@@ -1666,12 +1674,8 @@ def training_shard_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     them.  Same shard rule as :func:`shard_assignment`; one groupBy.
     """
     docs = t(spark, sf_dir, "documents")
-    shard = (h60("shard:", F.col("doc_id").cast("string")) % _N_SHARDS).alias("shard")
-    payload = F.concat(
-        F.col("doc_id").cast("string"),
-        F.lit("|"),
-        F.coalesce(X.fingerprint(F.col("text")), F.lit("")),
-    )
+    shard = (h60("shard:", "CAST(doc_id AS STRING)") % _N_SHARDS).alias("shard")
+    payload = _fp_payload("spark")
     # two independent 60-bit xor folds (different salts): commutative and
     # overflow-free at any shard size, ~120-bit collision strength
     return (
@@ -1690,18 +1694,13 @@ def training_shard_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_FP_CONCAT = (
-    "CONCAT(CAST(doc_id AS VARCHAR), '|', "
-    "COALESCE(md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')), ''))"
-)
-
 QUERIES["training_shard_checksums"] = QuerySpec(
     training_shard_checksums,
     f"""
     WITH h AS (
-      SELECT {sql_h60('shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
-             {sql_h60('chk:', _SQL_FP_CONCAT)} AS h1,
-             {sql_h60('chk2:', _SQL_FP_CONCAT)} AS h2
+      SELECT {render('h60', 'duckdb', 'shard:', 'CAST(doc_id AS VARCHAR)')} % {_N_SHARDS} AS shard,
+             {render('h60', 'duckdb', 'chk:', _fp_payload('duckdb'))} AS h1,
+             {render('h60', 'duckdb', 'chk2:', _fp_payload('duckdb'))} AS h2
       FROM documents
     )
     SELECT shard, COUNT(*) AS n_docs,
@@ -1739,7 +1738,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as corpus_drift_report / sample_weighted_reservoir.
     """
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select(X.tokens(F.col("text")).alias("l"))
+    toks = docs.select(X.tokens("text").alias("l"))
     uni = (
         toks.select(F.explode("l").alias("w"))
         .groupBy("w")
@@ -1789,7 +1788,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["text_collocations_pmi"] = QuerySpec(
     text_collocations_pmi,
     f"""
-    WITH tk AS (SELECT {_SQL_TOKENS} AS l FROM documents),
+    WITH tk AS (SELECT {SQL_TOKENS} AS l FROM documents),
     uni AS (
       SELECT w, COUNT(*) AS c
       FROM (SELECT unnest(l) AS w FROM tk) u GROUP BY 1
@@ -1839,7 +1838,7 @@ def training_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     words = (
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("word"))
+        docs.select(F.explode(X.tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
@@ -1895,9 +1894,9 @@ def _bpe_learn_ctes(n_merges: int, words_cte: str) -> str:
     return "".join(parts)
 
 
-_BPE_WORDS_CTE = """wq AS (
+_BPE_WORDS_CTE = f"""wq AS (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS n
-      FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+      FROM (SELECT unnest({SQL_TOKENS}) AS word
             FROM documents)
       GROUP BY word
     )"""
@@ -1961,7 +1960,7 @@ def training_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     doc_words = _persist_once(
         docs.select(
-            "doc_id", F.explode(X.tokens(F.col("text"))).alias("word")
+            "doc_id", F.explode(X.tokens("text")).alias("word")
         )
         # split('') yields one empty token: an empty/whitespace doc
         # would otherwise count 1 token segmenting to 0 subwords
@@ -1991,10 +1990,10 @@ def training_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_BPE_ENCODE_WORDS_CTE = """dw AS (
+_BPE_ENCODE_WORDS_CTE = f"""dw AS (
       SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT doc_id,
-                   unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
+                   unnest({SQL_TOKENS}) AS word
             FROM documents)
       WHERE word != ''
       GROUP BY 1, 2
@@ -2050,7 +2049,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = t(spark, sf_dir, "documents")
     vocab = (
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("w"))
+        docs.select(F.explode(X.tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
@@ -2098,7 +2097,7 @@ QUERIES["text_zipf_fit"] = QuerySpec(
     f"""
     WITH vocab AS (
       SELECT w, COUNT(*) AS c
-      FROM (SELECT unnest({_SQL_TOKENS}) AS w FROM documents) u GROUP BY 1
+      FROM (SELECT unnest({SQL_TOKENS}) AS w FROM documents) u GROUP BY 1
     ),
     ranked AS (
       SELECT ROW_NUMBER() OVER (ORDER BY c DESC, w) AS rnk, c FROM vocab
@@ -2148,7 +2147,7 @@ def text_stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     table), one lazy 1-row total broadcast, exact integer ratio."""
     docs = t(spark, sf_dir, "documents")
     dfreq = (
-        docs.select("doc_id", F.explode(F.array_distinct(X.tokens(F.col("text")))).alias("token"))
+        docs.select("doc_id", F.explode(F.array_distinct(X.tokens("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("doc_freq"))
     )
@@ -2172,7 +2171,7 @@ QUERIES["text_stopword_discovery"] = QuerySpec(
     f"""
     WITH dfreq AS (
       SELECT token, COUNT(*) AS doc_freq
-      FROM (SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+      FROM (SELECT doc_id, unnest(list_distinct({SQL_TOKENS})) AS token
             FROM documents) u
       GROUP BY 1
     ),

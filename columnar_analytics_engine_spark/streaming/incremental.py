@@ -56,7 +56,7 @@ def classify_batch(
     spark: SparkSession, batch: DataFrame, index_path: str
 ) -> DataFrame:
     """Classify one batch of (doc_id, text) rows against the index."""
-    fp = batch.select("doc_id", fingerprint(F.col("text")).alias("fp"))
+    fp = batch.select("doc_id", fingerprint("text").alias("fp"))
     hist = read_index(spark, index_path)
     w = W.partitionBy("fp").orderBy("doc_id")
     ranked = fp.withColumn("rn", F.row_number().over(w))

@@ -52,12 +52,15 @@ def sf_oracle() -> str:
 # complete with meaningful registry coverage instead of timing out.
 # ---------------------------------------------------------------------------
 
+_SMOKE_SUMMARY = pytest.StashKey[str]()
+
 _SWEEP_MODULES = {
     "test_oracle", "test_empty", "test_oracle_dtypes", "test_plan_lint",
 }
 
 
-def _smoke_queries() -> set[str]:
+def _smoke_queries() -> tuple[set[str], set[str], int]:
+    """(smoke query names, tag families they cover, registry size)."""
     import bench
     from columnar_analytics_engine_spark.queries import all_queries
 
@@ -68,13 +71,14 @@ def _smoke_queries() -> set[str]:
         for tag in qs[name].tags or ():
             by_tag.setdefault(tag, name)
     smoke.update(by_tag.values())
-    return smoke
+    tags = {tag for name in smoke if name in qs for tag in qs[name].tags or ()}
+    return smoke, tags, len(qs)
 
 
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
-    smoke = _smoke_queries()
+    smoke, tags, n_queries = _smoke_queries()
     kept, dropped = [], []
     for item in items:
         params = getattr(item, "callspec", None)
@@ -90,3 +94,15 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         items[:] = kept
         config.hook.pytest_deselected(items=dropped)
+    config.stash[_SMOKE_SUMMARY] = (
+        f"smoke tier: {len(dropped)} registry-sweep items deselected; "
+        f"{len(smoke)} of {n_queries} queries swept, covering {len(tags)} tag "
+        f"families ({', '.join(sorted(tags))}); "
+        "SPARK_GRAFT_FULL_TESTS=1 runs the full sweep"
+    )
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    line = config.stash.get(_SMOKE_SUMMARY, None)
+    if line is not None:
+        terminalreporter.write_line(line)

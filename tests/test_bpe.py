@@ -49,7 +49,7 @@ def test_bpe_merges_match_python_reference(spark, sf_small):
 
     docs = t(spark, sf_small, "documents")
     words = (
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("word"))
+        docs.select(F.explode(X.tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
@@ -93,7 +93,7 @@ def test_bpe_encode_matches_python_reference_and_invariants(spark, sf_small):
 
     docs = t(spark, sf_small, "documents")
     words = (
-        docs.select(F.explode(X.tokens(F.col("text"))).alias("word"))
+        docs.select(F.explode(X.tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
@@ -118,7 +118,7 @@ def test_training_bpe_encode_fertility_accounting(spark, sf_small):
     rows = training_bpe_encode(spark, sf_small).collect()
     docs = t(spark, sf_small, "documents")
     n_tok = docs.select(
-        F.sum(F.size(X.tokens(F.col("text")))).alias("n")
+        F.sum(F.size(X.tokens("text"))).alias("n")
     ).collect()[0]["n"]
     assert sum(r["n_tokens"] for r in rows) == n_tok
     for r in rows:

@@ -1,54 +1,9 @@
-"""Cross-engine hashing primitives: Spark and DuckDB must agree
-bit-for-bit — every dedup/LSH/sampling operator stands on this."""
+"""The affine MinHash family's constants are part of the operator
+definition (tests/test_kernels.py checks every kernel in both engines)."""
 
 from __future__ import annotations
 
-import duckdb
-from pyspark.sql import functions as F
-
-from columnar_analytics_engine_spark.functions.hashing import (
-    MINHASH_A,
-    MINHASH_B,
-    P31,
-    affine_hash_cols,
-    h60,
-    sql_affine_hash,
-    sql_h60,
-)
-
-SAMPLES = [
-    "", "a", "the", "hello world", "ünïcödé", "日本語テキスト",
-    "0", "-1", "3.14159", " leading space", "trailing space ",
-    "tab\tsep", "quote'quote", 'double"quote', "percent%sign",
-    "a" * 500, "é́ combining",
-]
-
-
-def test_h60_matches_duckdb(spark):
-    sdf = spark.createDataFrame([(s,) for s in SAMPLES], "s string")
-    got = {
-        r["s"]: r["h"]
-        for r in sdf.select("s", h60("px:", F.col("s")).alias("h")).collect()
-    }
-    con = duckdb.connect()
-    for s in SAMPLES:
-        (exp,) = con.execute(
-            f"SELECT {sql_h60('px:', '?')}".replace("?", "$1"), [s]
-        ).fetchone()
-        assert got[s] == exp, s
-
-
-def test_affine_family_matches_duckdb(spark):
-    k = 8
-    sdf = spark.createDataFrame([(s,) for s in SAMPLES], "s string")
-    cols = [c.alias(f"v{i}") for i, c in enumerate(affine_hash_cols(F.col("s"), k))]
-    got = {r["s"]: [r[f"v{i}"] for i in range(k)] for r in sdf.select("s", *cols).collect()}
-    con = duckdb.connect()
-    frags = sql_affine_hash("$1", k)
-    for s in SAMPLES:
-        exp = [con.execute(f"SELECT {frag}", [s]).fetchone()[0] for frag in frags]
-        assert got[s] == exp, s
-        assert all(0 <= v < P31 for v in exp)
+from columnar_analytics_engine_spark.functions.hashing import MINHASH_A, MINHASH_B
 
 
 def test_affine_constants_are_fixed():

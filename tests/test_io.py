@@ -115,6 +115,35 @@ def test_read_table_restores_nanos_conf(spark, sf_small):
     assert df.count() > 0
 
 
+def test_read_table_memo_sees_in_place_rewrite_of_any_part(spark, tmp_path):
+    """Rewriting a NON-first part file in place (same name, new size,
+    old mtimes restored) must re-resolve the table, and the memo keeps
+    one entry per table path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from columnar_analytics_engine_spark import io
+
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    part0, part1 = table / "part-00000.parquet", table / "part-00001.parquet"
+    pq.write_table(pa.table({"id": [1, 2]}), part0)
+    pq.write_table(pa.table({"id": [3, 4]}), part1)
+    first = read_table(spark, str(tmp_path), "t")
+    assert first.count() == 4
+    assert read_table(spark, str(tmp_path), "t") is first
+
+    times = [(p, os.stat(p)) for p in (table, part1)]
+    pq.write_table(pa.table({"id": list(range(3, 103))}), part1)
+    for p, st in times:
+        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+    again = read_table(spark, str(tmp_path), "t")
+    assert again is not first
+    assert again.count() == 102
+    key = os.path.abspath(io.table_path(str(tmp_path), "t"))
+    assert io._TABLE_DF_CACHE[key][1] is again
+
+
 def test_write_table_compression_codecs(spark, tmp_path):
     """zstd-compressed output must round-trip and be smaller than
     uncompressed on compressible data (the reference lists 'no

@@ -425,7 +425,7 @@ def test_quantile_zorder_validation_and_rank_bin(spark):
         zorder_frame(df, ["a", "b"], 4, bits=12, method="quantile")
     with pytest.raises(ValueError, match="unknown binning method"):
         zorder_frame(df, ["a", "b"], 4, method="nope")
-    got = df.select(rank_bin(F.col("a"), [2.0, 5.0, 7.0]).alias("r")).collect()
+    got = df.select(rank_bin("a", [2.0, 5.0, 7.0]).alias("r")).collect()
     assert [r["r"] for r in got] == [0, 0, 1, 1, 1, 2, 2, 3, 3, 3]
 
 

@@ -234,75 +234,6 @@ def _py_cdc(texts, bits):
     return out
 
 
-# ---------------------------------------------------------------------------
-# numeric n-gram hashing: Spark vs DuckDB vs a pure-Python reference
-# ---------------------------------------------------------------------------
-
-_GRAM_TOKENS = st.lists(
-    st.sampled_from(["the", "fox", "κ", "日本", "", "a b", "z", "123", "Ω"]),
-    min_size=0,
-    max_size=12,
-)
-
-
-def _py_gram_hashes(toks, n):
-    """Pure-Python twin of functions/hashing.gram_hash_array."""
-    import hashlib
-
-    from columnar_analytics_engine_spark.functions.hashing import (
-        P31,
-        ROLL_B1,
-        ROLL_B2,
-    )
-
-    pairs = []
-    for t in toks:
-        d = hashlib.md5(t.encode()).hexdigest()
-        pairs.append((int(d[:15], 16) % P31, int(d[15:30], 16) % P31))
-    out = []
-    for i in range(len(toks) - n + 1):
-        a, b = pairs[i]
-        for j in range(1, n):
-            a = (a * ROLL_B1 + pairs[i + j][0]) % P31
-            b = (b * ROLL_B2 + pairs[i + j][1]) % P31
-        out.append(a * 2147483648 + b)
-    return out
-
-
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(toks=_GRAM_TOKENS, n=st.integers(min_value=2, max_value=5))
-def test_gram_hashing_matches_duckdb_and_python(spark, toks, n):
-    """The dual polynomial rolling hash behind passage dedup and
-    contamination must be bit-identical in Spark, DuckDB, and the pure
-    math — over arbitrary unicode tokens and window sizes."""
-    from columnar_analytics_engine_spark.functions.hashing import (
-        gram_hash_array,
-        sql_gram_hash_array,
-        sql_token_hash_structs,
-        token_hash_structs,
-    )
-
-    sdf = spark.createDataFrame([(toks,)], "l array<string>")
-    got = sdf.select(
-        gram_hash_array(token_hash_structs(F.col("l")), n).alias("g")
-    ).first()["g"]
-
-    con = duckdb.connect()
-    con.register("t", pd.DataFrame({"l": [toks]}))
-    want = con.execute(
-        f"SELECT {sql_gram_hash_array('hl', n)} FROM "
-        f"(SELECT {sql_token_hash_structs('l')} AS hl FROM t)"
-    ).fetchone()[0]
-    con.close()
-
-    ref = _py_gram_hashes(toks, n)
-    assert list(got) == list(want) == ref
-
-
 @settings(
     max_examples=12,
     deadline=None,

@@ -341,7 +341,7 @@ def test_weighted_reservoir_stable_across_partitioning(spark, sf_oracle):
     base = {r["doc_id"] for r in sample_weighted_reservoir(spark, sf_oracle).collect()}
     from columnar_analytics_engine_spark.functions.hashing import h60
     docs = t_(spark, sf_oracle, "documents").repartition(17)
-    u_int = (h60("wrs:", F.col("doc_id").cast("string")) % 1_000_000) + 1
+    u_int = (h60("wrs:", "CAST(doc_id AS STRING)") % 1_000_000) + 1
     u = u_int.cast("double") / F.lit(1_000_000.0)
     w = F.greatest(F.col("n_chars"), F.lit(1)).cast("double")
     key = F.round((-F.log(u) / w) * F.lit(1e12)).cast("long")
